@@ -3766,6 +3766,14 @@ object ChSql {
   }
 
   private def rewriteLimitByTop(sql: String): String = {
+    // keyword `w` at `i` with an identifier boundary on both sides
+    // (`_` is a word character: `o_orderkey` holds no ORDER)
+    def wordAt(s: String, i: Int, w: String): Boolean = {
+      def ident(j: Int) = j >= 0 && j < s.length &&
+        (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')
+      s.regionMatches(true, i, w, 0, w.length) &&
+        !ident(i - 1) && !ident(i + w.length)
+    }
     // locate a depth-0 `LIMIT n[, k] [OFFSET o] BY` outside strings
     val re = ("(?is)\\bLIMIT\\s+(\\d+)(?:\\s*,\\s*(\\d+))?" +
       "(?:\\s+OFFSET\\s+(\\d+))?\\s+BY\\b").r
@@ -3802,9 +3810,7 @@ object ChSql {
           case '\'' => inStr = true
           case '(' => depth += 1
           case ')' => depth -= 1
-          case 'L' | 'l' if depth == 0 &&
-            rest.regionMatches(true, i, "LIMIT", 0, 5) &&
-            (i == 0 || !rest.charAt(i - 1).isLetterOrDigit) => at = i
+          case 'L' | 'l' if depth == 0 && wordAt(rest, i, "LIMIT") => at = i
           case _ =>
         }
         i += 1
@@ -3825,9 +3831,7 @@ object ChSql {
           case '\'' => inStr = true
           case '(' => depth += 1
           case ')' => depth -= 1
-          case 'O' | 'o' if depth == 0 &&
-            core.regionMatches(true, i, "ORDER", 0, 5) &&
-            (i == 0 || !core.charAt(i - 1).isLetterOrDigit) => at = i
+          case 'O' | 'o' if depth == 0 && wordAt(core, i, "ORDER") => at = i
           case _ =>
         }
         i += 1
@@ -3839,15 +3843,66 @@ object ChSql {
       else (core.substring(0, orderAt),
         core.substring(orderAt).replaceAll("(?is)^ORDER\\s+BY", "").trim)
     if (orderExpr.matches("(?is).*\\bWITH\\s+FILL\\b.*")) return sql
-    val winOrder = if (orderExpr.nonEmpty) orderExpr else byCols
+    // CH sorts before it projects, so an ORDER BY key may name a column
+    // the SELECT list drops. Such a key rides as a hidden `__lbkN`
+    // column of the core; a key naming an output column stays as is.
+    val (src, keys, hidden) = hideSortKeys(inner, orderExpr)
+    val winOrder = if (keys.nonEmpty) keys else byCols
     val outerOrder =
-      if (orderExpr.nonEmpty) s" ORDER BY $orderExpr, __lb" else ""
-    s"""SELECT * EXCEPT (__lb) FROM (
+      if (keys.nonEmpty) s" ORDER BY $keys, __lb" else ""
+    val dropped = ("__lb" +: hidden).mkString(", ")
+    s"""SELECT * EXCEPT ($dropped) FROM (
        |SELECT * FROM (
        |SELECT *, row_number() OVER (PARTITION BY $byCols ORDER BY $winOrder) AS __lb
-       |FROM ($inner) __lbsrc
+       |FROM ($src) __lbsrc
        |) __lbw WHERE __lb > $offN AND __lb <= ${offN + limN}$outerOrder $finalLimit
        |) __lbo""".stripMargin
+  }
+
+  private val SortItemRe =
+    "(?is)^(.*?)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)$".r
+  private val Ident = "`?(\\w+)`?"
+  private val AliasRe = ("(?is).*\\bAS\\s+" + Ident + "$").r
+  private val ColumnRe = ("^(?:\\w+\\.)*" + Ident + "$").r
+
+  /** Sort keys of a LIMIT BY core whose ORDER BY was split off: keys
+    * that are not output names of a single SELECT become hidden
+    * `__lbkN` columns of it. Returns the core, the ORDER BY list to use
+    * over the core's output and the hidden column names. */
+  private def hideSortKeys(core: String, orderExpr: String)
+      : (String, String, Seq[String]) = {
+    val items = splitTopLevelCommas(orderExpr).map(_.trim).filter(_.nonEmpty)
+      .map { it =>
+        val m = SortItemRe.findFirstMatchIn(it).get
+        (m.group(1).trim, m.group(2))
+      }
+    val asIs = (core, orderExpr, Seq.empty[String])
+    if (items.isEmpty || items.exists(_._1.matches("\\d+")) ||
+        core.matches("(?is).*\\b(UNION|INTERSECT)\\b.*")) return asIs
+    // a hidden column would change what DISTINCT collapses
+    selectListSpan(core) match {
+      case Some((from, to))
+          if !core.substring(from, to).trim.matches("(?is)DISTINCT\\b.*") =>
+        val outs = splitTopLevelCommas(core.substring(from, to)).map(_.trim)
+        val star = outs.exists(_.matches("(?s)(\\w+\\.)*\\*.*"))
+        val names = outs.flatMap { o =>
+          AliasRe.findFirstMatchIn(o).orElse(ColumnRe.findFirstMatchIn(o))
+            .map(_.group(1).toLowerCase)
+        }.toSet
+        def visible(e: String) = e.matches(Ident) &&
+          (star || names(e.stripPrefix("`").stripSuffix("`").toLowerCase))
+        val keyed = items.zipWithIndex.map { case ((e, mod), i) =>
+          if (visible(e)) (e + mod, None) else (s"__lbk$i$mod", Some((e, i)))
+        }
+        val hide = keyed.flatMap(_._2)
+        if (hide.isEmpty) asIs
+        else (core.substring(0, to) +
+            hide.map { case (e, i) => s", $e AS __lbk$i" }.mkString + " " +
+            core.substring(to),
+          keyed.map(_._1).mkString(", "),
+          hide.map { case (_, i) => s"__lbk$i" })
+      case _ => asIs
+    }
   }
 
   def translate(chSql: String): String = {
@@ -5970,11 +6025,19 @@ object ChSql {
   /** Insert `, grouping_id() AS __gid` before the main SELECT's top-level
     * FROM so subtotal rows are identifiable post-hoc. None when the query
     * shape is unsupported (rollup inside a subquery, no top-level FROM). */
-  private def injectGroupingId(sql: String): Option[String] = {
+  private def injectGroupingId(sql: String): Option[String] =
+    selectListSpan(sql).map { case (_, from) =>
+      sql.substring(0, from) + ", grouping_id() AS __gid " +
+        sql.substring(from)
+    }
+
+  /** The main SELECT's list: from after its SELECT keyword to its
+    * top-level FROM. None without a top-level FROM. */
+  private def selectListSpan(sql: String): Option[(Int, Int)] = {
     var depth = 0
     var inStr = false
     var i = 0
-    var sawSelect = false
+    var listAt = -1
     while (i < sql.length) {
       val c = sql.charAt(i)
       if (inStr) {
@@ -5990,10 +6053,8 @@ object ChSql {
           while (j < sql.length &&
             (Character.isLetterOrDigit(sql(j)) || sql(j) == '_')) j += 1
           val w = sql.substring(i, j).toUpperCase
-          if (w == "SELECT") sawSelect = true
-          else if (w == "FROM" && sawSelect)
-            return Some(sql.substring(0, i) +
-              ", grouping_id() AS __gid " + sql.substring(i))
+          if (w == "SELECT" && listAt < 0) listAt = j
+          else if (w == "FROM" && listAt >= 0) return Some((listAt, i))
           i = j - 1
         case _ =>
       }

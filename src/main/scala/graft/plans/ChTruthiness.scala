@@ -366,6 +366,7 @@ class ChExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => ChNanCompareRule)
     ext.injectResolutionRule(_ => graft.functions.ChIsConstantRule)
     ext.injectOptimizerRule(_ => ChUdtLiteralRule)
+    ext.injectColumnar(_ => ChConstColumnarRule)
   }
 }
 
