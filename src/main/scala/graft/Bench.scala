@@ -21,33 +21,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def builder() = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Match Engine.session (r15): let AQE coalesce post-shuffle
-      // partitions to the advisory size instead of maximizing
-      // parallelism — fewer, fuller tasks cut scheduler overhead on
-      // KB-scale shuffle stages (measured −10-15% total here, and it
-      // restores 32-core ≥ 8-core ordering at this SF); at the 100 TB
-      // end the advisory size governs and nothing shrinks below real
-      // data parallelism. Applied to BOTH sessions via this builder.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Sort-based shuffle writer for BOTH sessions (engine and control,
-      // so the ratio stays apples-to-apples): the default bypass-merge
-      // writer opens mapTasks×reducePartitions shuffle files per
-      // exchange, which dominated small-stage wall time on this host
-      // (r15 stack sampling); >200-partition production shuffles never
-      // use bypass, so this also makes the bench exercise the at-scale
-      // writer path. See OPTIMIZATION_r15.md.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-    val spark = builder().withExtensions(new graft.plans.ChExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Engine.session(cpus)
     // r16: untimed multi-row-group re-layout of the fixture dir (see
     // BenchLayout) so scans can split and the driver's 8-vs-32-core
     // scaling measurement reads the engine, not the single-row-group
@@ -56,15 +31,16 @@ object Bench {
     // original dir if the rewrite fails.
     val relaidOut = BenchLayout.relayout(spark, sfDir)
     val benchDir = relaidOut.getOrElse(sfDir)
-    // VANILLA control session: the SAME query builders on a session with
-    // ZERO engine extensions, sharing the SparkContext. Interleaved with
-    // the engine samples it separates host noise (both drift together,
-    // ratio ~1) from engine-session overhead (ratio grows) — the recorded
-    // artifact carries the per-query engine/control ratio so cross-round
-    // comparisons survive host-speed changes (r9 profile conclusion).
+    // VANILLA control session: the SAME query builders and the same
+    // Engine.settings on a session with ZERO engine extensions, sharing
+    // the SparkContext. Interleaved with the engine samples it separates
+    // host noise (both drift together, ratio ~1) from engine-session
+    // overhead (ratio grows) — the recorded artifact carries the
+    // per-query engine/control ratio so cross-round comparisons survive
+    // host-speed changes (r9 profile conclusion).
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val control = builder().getOrCreate()
+    val control = Engine.builder(cpus).getOrCreate()
     SparkSession.setDefaultSession(spark)
     SparkSession.setActiveSession(spark)
 
@@ -119,16 +95,13 @@ object Bench {
           Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(200) }
       samples(name) += (System.nanoTime() - t0) / 1e9
-      // r16 bench hygiene (r15 VERDICT "What's wrong" #1): operators that
-      // persist intermediates as in-query barriers (Dedup.minhashPairs'
-      // `hashed`/`sized`) left their caches warm across the 7 runs, so
-      // runs 2-7 timed the post-cache pipeline only. Dropping all cached
-      // data AFTER the clock stops makes every run a cold end-to-end
-      // execution of the full pipeline (the barrier is still built and
-      // used WITHIN each run, which is where it is genuinely required).
-      // Applied to engine and control alike — both run the same builders
-      // — so the ratio gate stays apples-to-apples. No-op (<1 ms) for
-      // queries that cache nothing.
+      // Drop all cached data AFTER the clock stops. Dedup.minhashPairs
+      // persists its `hashed`/`sized` barriers when the DataFrame is
+      // BUILT, and each query is built once per session, so this clears
+      // them for good: run 1 executes with the barriers, runs 2-7 execute
+      // the same plan without them (each subtree recomputed per consumer).
+      // Applied to engine and control alike — both run the same builders.
+      // No-op (<1 ms) for queries that cache nothing.
       sess.catalog.clearCache()
     }
     (1 to runs).foreach { r =>

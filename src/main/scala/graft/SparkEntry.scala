@@ -9,8 +9,7 @@ object SparkEntry {
   private lazy val allQueries: Seq[Q] =
     CoreQueries.all ++ FunctionQueries.all ++ OperatorQueries.all ++
       PipelineQueries.all ++ WindowedQueries.all ++ CombinatorQueries.all ++
-      Round4Queries.all ++ DialectQueries.all ++ Round5Queries.all ++
-      Round8Queries.all
+      DialectQueries.all ++ AggregateQueries.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

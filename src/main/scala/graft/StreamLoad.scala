@@ -11,10 +11,12 @@ import org.apache.spark.sql.functions._
   * Drives each operator from the built-in rate source for a fixed wall
   * interval and reports, per micro-batch progress sample: input and
   * processed rows/sec, batch duration, and state-store size (rows +
-  * bytes). Event time is synthetic (10 ms per row counter tick), so the
-  * watermark advances deterministically with load and the harness can
-  * check the key scale property: STATE SIZE PLATEAUS (bounded by the
-  * watermark horizon), it does not grow with stream length.
+  * bytes), plus the rows the dedup stream dropped. Event time is
+  * synthetic (40 ms per group of 4 counter ticks: 10 ms per row on
+  * average), so the watermark advances deterministically with load and
+  * the harness can check the key scale property: STATE SIZE PLATEAUS
+  * (bounded by the watermark horizon), it does not grow with stream
+  * length.
   *
   * args: [rowsPerSecond=200000] [secondsPerOp=30]
   * Results are recorded in SCALE.md ("Streaming under load").
@@ -25,23 +27,24 @@ object StreamLoad {
     val secs = if (args.length > 1) args(1).toInt else 30
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Engine.session(cpus.toInt)
-    spark.sparkContext.setLogLevel("WARN")
 
-    // rate source -> event-shaped rows; event time = epoch + 10 ms per
-    // counter tick (deterministic, monotone per partition), 1000 users,
-    // 4 event types, dup_key repeats every 4 rows (for dedup state)
+    // rate source -> event-shaped rows; each group of 4 consecutive
+    // counter ticks shares one dup_key and one event time (epoch + 40 ms
+    // per group: deterministic, monotone per partition), so the dedup
+    // stream drops 3 of every 4 rows; 1000 users, 4 event types
+    val group = expr("value DIV 4")
     def events: DataFrame = spark.readStream
       .format("rate")
       .option("rowsPerSecond", rps)
       .option("numPartitions", 8)
       .load()
       .select(
-        timestamp_millis(lit(1700000000000L) + col("value") * 10).as("ts"),
+        timestamp_millis(lit(1700000000000L) + group * 40).as("ts"),
         (col("value") % 1000).as("user_id"),
         element_at(array(lit("view"), lit("click"), lit("purchase"),
           lit("error")), (col("value") % 4 + 1).cast("int")).as("event_type"),
         (col("value") % 97).cast("double").as("value"),
-        (col("value") / 4).as("dup_key"))
+        group.as("dup_key"))
 
     def run(tag: String, df: DataFrame, outputMode: String): Unit = {
       val ckpt = java.nio.file.Files
@@ -58,13 +61,16 @@ object StreamLoad {
           s"@ $rps rows/s requested, $secs s")
         ps.foreach { p =>
           val st = p.stateOperators.headOption
+          val dupDrop = st.flatMap(s => Option(s.customMetrics
+            .get("numDroppedDuplicateRows"))).map(_.longValue).getOrElse(-1L)
           println(f"[streamload]   batch ${p.batchId}%3d " +
             f"in=${p.inputRowsPerSecond}%,.0f r/s " +
             f"proc=${p.processedRowsPerSecond}%,.0f r/s " +
             f"dur=${p.batchDuration}%5d ms " +
             f"stateRows=${st.map(_.numRowsTotal).getOrElse(-1L)}%9d " +
             f"stateMB=${st.map(_.memoryUsedBytes).getOrElse(-1L) / 1e6}%8.1f " +
-            f"evict=${st.map(_.numRowsRemoved).getOrElse(-1L)}%8d")
+            f"evict=${st.map(_.numRowsRemoved).getOrElse(-1L)}%8d " +
+            f"dupDrop=${dupDrop}%8d")
         }
       } finally {
         q.stop()

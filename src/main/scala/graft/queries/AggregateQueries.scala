@@ -1,14 +1,16 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.{ChSql, Tables}
+import graft.ChSql
 
-/** Round-8 coverage: the weighted/variant quantile family, co-moment
-  * matrices, sparkbar, stem, and Object('json')-style subcolumn access —
-  * each against a DuckDB oracle that re-implements the reference
-  * semantics cited in the function's Scaladoc.
+/** Aggregate-function families through the CH dialect: the weighted/
+  * variant quantile family and parameterized-aggregate call syntax,
+  * co-moment matrices, moment statistics (skew/kurt), sparkbar, the
+  * stochastic regression family and the SQL-callable sumMap — each
+  * against a DuckDB oracle that re-implements the reference semantics
+  * cited in the function's Scaladoc.
   */
-object Round8Queries {
+object AggregateQueries {
 
   val all: Seq[Q] = Seq(
 
@@ -164,26 +166,6 @@ object Round8Queries {
           |FROM lineitem""".stripMargin, dir)
     },
 
-    // Object('json') subcolumn access over events.props (SURVEY §1.1 —
-    // dynamic JSON paths map to get_json_object/JSONExtract*)
-    Q.df("q_json_subcolumns",
-      """SELECT event_type,
-        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT))
-        |            AS BIGINT) AS sk,
-        |       CAST(max(CAST(json_extract_string(props, '$.k') AS INT))
-        |            AS BIGINT) AS mk,
-        |       count(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
-      (s, dir) =>
-      ChSql.sql(s,
-        """SELECT event_type,
-          |       sum(JSONExtractInt(props, 'k')) AS sk,
-          |       CAST(max(JSONExtractInt(props, 'k')) AS BIGINT) AS mk,
-          |       count() AS n
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-        dir)
-    },
-
     // sparkbar re-expressed in DuckDB SQL (bucket index, integer-division
     // bucket average, 7-level scaling — AggregateFunctionSparkbar.h
     // semantics hold in plain SQL because y here is always positive, so
@@ -238,42 +220,90 @@ object Round8Queries {
         dir)
     },
 
-    // H3 table-free family (functions/H3Ch.scala): the oracle pins the
-    // reference's own outputs (00926/01040/01070/02155/02165 fixtures) as
-    // literals — DuckDB has no H3, but the expected values are constants
-    Q.df("q_h3_family",
-      """SELECT * FROM (VALUES
-        |  ('base_cell',   CAST(12 AS BIGINT)),
-        |  ('center15',    CAST(644542512295313408 AS BIGINT)),
-        |  ('is_pentagon', CAST(1 AS BIGINT)),
-        |  ('is_valid',    CAST(1 AS BIGINT)),
-        |  ('num_hex10',   CAST(33897029882 AS BIGINT)),
-        |  ('parent0',     CAST(576918149140578303 AS BIGINT)),
-        |  ('parent3',     CAST(590398848891879423 AS BIGINT)),
-        |  ('res10',       CAST(10 AS BIGINT)),
-        |  ('string_to',   CAST(617420388351344639 AS BIGINT))
-        |) AS t(op, v) ORDER BY op""".stripMargin) { (s, dir) =>
-      // outer subquery: CH binds a trailing ORDER BY to the LAST union
-      // branch, so the global sort needs the wrap (same in both dialects)
+    // skewPop/skewSamp/kurtPop/kurtSamp (ref
+    // AggregateFunctionsStatisticsSimple.h) — runs through ChSql so the
+    // SQL-registered CH names are what's exercised; the oracle computes
+    // the same statistics from raw power sums in DuckDB
+    Q.df("q_skew_kurt",
+      """WITH m AS (
+        |  SELECT l_returnflag,
+        |         CAST(count(*) AS DOUBLE) AS n,
+        |         avg(l_quantity) AS m1,
+        |         avg(l_quantity * l_quantity) AS m2,
+        |         avg(pow(l_quantity, 3)) AS m3,
+        |         avg(pow(l_quantity, 4)) AS m4
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l_returnflag,
+        |  round((m3 - 3*m1*m2 + 2*pow(m1,3)) / pow(m2 - m1*m1, 1.5), 6)
+        |    AS skew_pop,
+        |  round(((m3 - 3*m1*m2 + 2*pow(m1,3)) * n/(n-1))
+        |        / pow((m2 - m1*m1) * n/(n-1), 1.5), 6) AS skew_samp,
+        |  round((m4 - 4*m1*m3 + 6*m1*m1*m2 - 3*pow(m1,4))
+        |        / pow(m2 - m1*m1, 2), 6) AS kurt_pop,
+        |  round(((m4 - 4*m1*m3 + 6*m1*m1*m2 - 3*pow(m1,4)) * n/(n-1))
+        |        / pow((m2 - m1*m1) * n/(n-1), 2), 6) AS kurt_samp
+        |FROM m ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       ChSql.sql(s,
-        """SELECT op, v FROM (
-        |SELECT 'base_cell' AS op,
-        |       toInt64(h3GetBaseCell(612916788725809151)) AS v
-        |UNION ALL SELECT 'center15',
-        |       toInt64(h3ToCenterChild(577023702256844799, 15))
-        |UNION ALL SELECT 'is_pentagon',
-        |       toInt64(h3IsPentagon(stringToH3('821c07fffffffff')))
-        |UNION ALL SELECT 'is_valid',
-        |       toInt64(h3IsValid(581276613233082367))
-        |UNION ALL SELECT 'num_hex10', toInt64(h3NumHexagons(10))
-        |UNION ALL SELECT 'parent0',
-        |       toInt64(h3ToParent(599405990164561919, 0))
-        |UNION ALL SELECT 'parent3',
-        |       toInt64(h3ToParent(599405990164561919, 3))
-        |UNION ALL SELECT 'res10',
-        |       toInt64(h3GetResolution(621807531097128959))
-        |UNION ALL SELECT 'string_to',
-        |       toInt64(stringToH3('89184926cc3ffff'))
-        |) ORDER BY op""".stripMargin, dir)
-    })
+        """SELECT l_returnflag,
+          |       round(skewPop(l_quantity), 6) AS skew_pop,
+          |       round(skewSamp(l_quantity), 6) AS skew_samp,
+          |       round(kurtPop(l_quantity), 6) AS kurt_pop,
+          |       round(kurtSamp(l_quantity), 6) AS kurt_samp
+          |FROM lineitem GROUP BY l_returnflag
+          |ORDER BY l_returnflag""".stripMargin, dir)
+    },
+
+    // CH parameterized-aggregate call syntax through the dialect shim
+    // (ref ASTFunction.h `parameters`): quantile(p)(x) and
+    // quantileExactWeighted(p)(x, w); the weighted oracle replays the
+    // reference's DISCRETE pick — first value whose cumulative weight
+    // reaches ceil(level·W) (ref QuantileExactWeighted.h get)
+    Q.df("q_quantile_param",
+      """SELECT l_returnflag,
+        |       round(quantile_cont(l_extendedprice, 0.9), 2) AS p90,
+        |       (SELECT round(v, 2) FROM (
+        |          SELECT l_extendedprice AS v,
+        |                 sum(l_linenumber) OVER (ORDER BY l_extendedprice) AS c,
+        |                 ceil(0.5 * sum(l_linenumber) OVER ()) AS th
+        |          FROM lineitem l WHERE l.l_returnflag = o.l_returnflag)
+        |        WHERE c >= th ORDER BY v LIMIT 1) AS wmed
+        |FROM lineitem o GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) {
+      (s, dir) =>
+      ChSql.sql(s,
+        """SELECT l_returnflag,
+          |       round(quantile(0.9)(l_extendedprice), 2) AS p90,
+          |       round(quantileExactWeighted(0.5)(l_extendedprice,
+          |             l_linenumber), 2) AS wmed
+          |FROM lineitem GROUP BY l_returnflag
+          |ORDER BY l_returnflag""".stripMargin, dir)
+    },
+
+    // sumMap as a SQL-callable aggregate (ref AggregateFunctionSumMap.h):
+    // the drop-in name collects the per-group pair list and fans keys out
+    // in the finishing expression — the SCALABLE formulation for huge
+    // groups stays explode+groupBy (q_sum_map); this pins the CH-shaped
+    // (sorted keys, values) tuple surface
+    Q.df("q_summap_sql",
+      """SELECT l_returnflag,
+        |       array_to_string(list(l_linestatus ORDER BY l_linestatus), ',')
+        |         AS ks,
+        |       array_to_string(list(CAST(round(s, 2) AS VARCHAR)
+        |                            ORDER BY l_linestatus), ',') AS vs
+        |FROM (SELECT l_returnflag, l_linestatus,
+        |             sum(CAST(l_quantity AS DOUBLE)) AS s
+        |      FROM lineitem GROUP BY l_returnflag, l_linestatus)
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) {
+      (s, dir) =>
+      ChSql.sql(s,
+        """SELECT l_returnflag,
+          |       array_join(m.keys, ',') AS ks,
+          |       array_join(transform(m.values,
+          |                    x -> CAST(round(x, 2) AS STRING)), ',') AS vs
+          |FROM (SELECT l_returnflag,
+          |             sumMap(array(l_linestatus),
+          |                    array(CAST(l_quantity AS DOUBLE))) AS m
+          |      FROM lineitem GROUP BY l_returnflag)
+          |ORDER BY l_returnflag""".stripMargin, dir)
+    }
+  )
 }

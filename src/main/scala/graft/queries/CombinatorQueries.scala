@@ -2,9 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.GraphiteRollup
 
 /** Aggregate-combinator and remaining engine-family coverage
-  * (SURVEY §2.4 combinators, §2.1 VersionedCollapsing; ref
+  * (SURVEY §2.4 combinators, §2.1 VersionedCollapsing and Graphite; ref
   * registerAggregateFunctions.cpp:84-94).
   */
 object CombinatorQueries {
@@ -334,6 +335,34 @@ object CombinatorQueries {
           CombinatorChain.build("maxIfOrDefault",
             Seq(col("l_quantity").cast("double"),
               col("l_quantity") > 100000)).as("max_or_default"))
+    },
+
+    // GraphiteMergeTree retention rollup (ref
+    // GraphiteRollupSortedAlgorithm.h): 1-minute buckets under a day old,
+    // hourly to a week, daily beyond — one CASE projection + one hash agg
+    Q.df("q_graphite_rollup",
+      """WITH b AS (
+        |  SELECT event_type,
+        |         CAST(floor(epoch(ts)) AS BIGINT) AS ep,
+        |         CAST(floor(epoch(TIMESTAMP '2024-01-31 12:00:00'))
+        |              AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) AS age,
+        |         value
+        |  FROM events)
+        |SELECT event_type,
+        |       CASE WHEN age >= 604800 THEN ep - ep % 86400
+        |            WHEN age >= 86400  THEN ep - ep % 3600
+        |            ELSE ep - ep % 60 END AS bucket,
+        |       round(avg(value), 4) AS v
+        |FROM b GROUP BY event_type, bucket
+        |ORDER BY event_type, bucket""".stripMargin) { (s, dir) =>
+      val rolled = GraphiteRollup.rollup(
+        Tables.load(s, dir, "events"),
+        pathCol = "event_type", timeCol = "ts", valueCol = "value",
+        retentions = Seq((0L, 60L), (86400L, 3600L), (604800L, 86400L)),
+        aggFn = "avg", now = lit("2024-01-31 12:00:00").cast("timestamp"))
+      rolled.select(col("event_type"), col("ts").as("bucket"),
+          round(col("value"), 4).as("v"))
+        .orderBy("event_type", "bucket")
     }
   )
 }

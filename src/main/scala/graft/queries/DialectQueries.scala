@@ -2,13 +2,14 @@ package graft.queries
 
 import graft.ChSql
 
-/** Round-4 dialect-layer queries: CH-exact hashing, best-effort datetime
+/** Dialect-layer queries: CH-exact hashing, best-effort datetime
   * parsing, the cast(x, 'T') call form, static toTypeName folding,
-  * numeric truthiness, and split max_substrings — each through ChSql so
-  * the SQL surface is what's verified. Hash and parse oracles are the
-  * bit-exact values the reference's own golden tests pin
+  * numeric truthiness, split max_substrings, the typed IPv4/IPv6 coding
+  * family and DateTime64 sub-second rendering — each through ChSql so
+  * the SQL surface is what's verified. Hash, parse and IPv6 oracles are
+  * the bit-exact values the reference's own golden tests pin
   * (00259_hashing_tuples, 01032_cityHash64_for_decimal,
-  * 00569_parse_date_time_best_effort families).
+  * 00569_parse_date_time_best_effort, 02007/02234/00938 families).
   */
 object DialectQueries {
 
@@ -125,6 +126,63 @@ object DialectQueries {
             |       arrayStringConcat(splitByChar(' ', n_name, 3), '|')
             |         AS head3
             |FROM nation ORDER BY n_nationkey LIMIT 10""".stripMargin, dir)
+    },
+
+    // parse → canonical-format round trips, IPv4-mapped promotion,
+    // CIDR masking, and numeric IPv4 coding, keyed off nation rows
+    Q.df("q_fn_ipv6",
+      """SELECT n.n_nationkey,
+        |       v.v6, v.mapped, v.lo126, v.hi126, v.v4str,
+        |       CAST(167772160 + n.n_nationkey AS BIGINT) AS v4num
+        |FROM nation n
+        |JOIN (VALUES
+        |  (0, '2001:db8::',  '::ffff:10.0.0.0', '2001:db8::',  '2001:db8::3', '10.0.0.0'),
+        |  (1, '2001:db8::1', '::ffff:10.0.0.1', '2001:db8::',  '2001:db8::3', '10.0.0.1'),
+        |  (2, '2001:db8::2', '::ffff:10.0.0.2', '2001:db8::',  '2001:db8::3', '10.0.0.2'),
+        |  (3, '2001:db8::3', '::ffff:10.0.0.3', '2001:db8::',  '2001:db8::3', '10.0.0.3'),
+        |  (4, '2001:db8::4', '::ffff:10.0.0.4', '2001:db8::4', '2001:db8::7', '10.0.0.4'),
+        |  (5, '2001:db8::5', '::ffff:10.0.0.5', '2001:db8::4', '2001:db8::7', '10.0.0.5'),
+        |  (6, '2001:db8::6', '::ffff:10.0.0.6', '2001:db8::4', '2001:db8::7', '10.0.0.6'),
+        |  (7, '2001:db8::7', '::ffff:10.0.0.7', '2001:db8::4', '2001:db8::7', '10.0.0.7'))
+        |  v(k, v6, mapped, lo126, hi126, v4str) ON v.k = n.n_nationkey
+        |WHERE n.n_nationkey < 8
+        |ORDER BY n.n_nationkey""".stripMargin) { (s, dir) =>
+      ChSql.sql(s,
+        """SELECT n_nationkey,
+          |  toString(toIPv6(concat('2001:0db8::', toString(n_nationkey)))) AS v6,
+          |  toString(IPv4ToIPv6(toIPv4(concat('10.0.0.', toString(n_nationkey))))) AS mapped,
+          |  toString(tupleElement(IPv6CIDRToRange(toIPv6(concat('2001:db8::', toString(n_nationkey))), 126), 1)) AS lo126,
+          |  toString(tupleElement(IPv6CIDRToRange(toIPv6(concat('2001:db8::', toString(n_nationkey))), 126), 2)) AS hi126,
+          |  toString(toIPv4(concat('10.0.0.', toString(n_nationkey)))) AS v4str,
+          |  IPv4StringToNum(concat('10.0.0.', toString(n_nationkey))) AS v4num
+          |FROM nation WHERE n_nationkey < 8
+          |ORDER BY n_nationkey""".stripMargin, dir)
+    },
+
+    // DateTime64 sub-second surface: scale-exact rendering (3 and 6
+    // digits), wall-clock parsing, and tick-level comparison — the
+    // oracle recomputes the same renderings with string arithmetic
+    Q.df("q_datetime64",
+      """SELECT o_orderkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') || ' 12:34:56.' ||
+        |    lpad(CAST(o_orderkey % 1000 AS VARCHAR), 3, '0') AS dt3,
+        |  strftime(o_orderdate, '%Y-%m-%d') || ' 12:34:56.' ||
+        |    lpad(CAST(o_orderkey % 1000 AS VARCHAR), 3, '0') || '000' AS dt6,
+        |  CAST(o_orderkey % 1000 < 500 AS BIGINT) AS before_half
+        |FROM orders WHERE o_orderkey < 200
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
+      ChSql.sql(s,
+        """SELECT o_orderkey,
+          |  toString(toDateTime64(concat(toString(toDate(o_orderdate)), ' 12:34:56.',
+          |    leftPad(toString(o_orderkey % 1000), 3, '0')), 3)) AS dt3,
+          |  toString(toDateTime64(concat(toString(toDate(o_orderdate)), ' 12:34:56.',
+          |    leftPad(toString(o_orderkey % 1000), 3, '0')), 6)) AS dt6,
+          |  if(toDateTime64(concat(toString(toDate(o_orderdate)), ' 12:34:56.',
+          |       leftPad(toString(o_orderkey % 1000), 3, '0')), 3) <
+          |     toDateTime64(concat(toString(toDate(o_orderdate)), ' 12:34:56.500'), 3),
+          |     1, 0) AS before_half
+          |FROM orders WHERE o_orderkey < 200
+          |ORDER BY o_orderkey""".stripMargin, dir)
     }
   )
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{ChSql, Tables}
 
 /** Scalar-function family coverage (SURVEY.md §2.8, ref `src/Functions/`
   * ~810 registered names). Each query exercises one family through the
@@ -372,6 +372,107 @@ object FunctionQueries {
             ch.toISOYear(col("o_orderdate")).as("iso_year"),
             ch.countMatches(col("o_orderpriority"), "[A-Z]+").as("n_words"))
           .orderBy("o_orderkey")
+    },
+
+    // encrypt/decrypt round trip (ref FunctionsAES.h) — the oracle is the
+    // plaintext identity, which is exactly what a correct
+    // decrypt(encrypt(x)) must produce
+    Q.df("q_encrypt_roundtrip",
+      """SELECT c_custkey, c_name AS plain FROM customer
+        |ORDER BY c_custkey LIMIT 20""".stripMargin) { (s, dir) =>
+      ChSql.sql(s,
+        """SELECT c_custkey,
+          |       CAST(decrypt('aes-128-ecb',
+          |              encrypt('aes-128-ecb', c_name, '0123456789abcdef'),
+          |              '0123456789abcdef') AS STRING) AS plain
+          |FROM customer ORDER BY c_custkey LIMIT 20""".stripMargin, dir)
+    },
+
+    // vector norm/distance family over embeddings (ref arrayNorm.cpp,
+    // arrayDistance.cpp) — DuckDB's list lambdas are the oracle
+    Q.df("q_vector_norms",
+      """SELECT vec_id,
+        |  round(list_aggregate(list_transform(embedding,
+        |        x -> abs(CAST(x AS DOUBLE))), 'sum'), 4) AS l1,
+        |  round(sqrt(list_aggregate(list_transform(embedding,
+        |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')), 4)
+        |    AS l2,
+        |  round(list_aggregate(list_transform(embedding,
+        |        x -> abs(CAST(x AS DOUBLE))), 'max'), 4) AS linf,
+        |  round(pow(list_aggregate(list_transform(embedding,
+        |        x -> pow(abs(CAST(x AS DOUBLE)), 3)), 'sum'),
+        |        1.0/3.0), 4) AS l3
+        |FROM embeddings WHERE vec_id < 50 ORDER BY vec_id""".stripMargin) {
+      (s, dir) =>
+      ChSql.sql(s,
+        """SELECT vec_id,
+          |       round(L1Norm(emb), 4) AS l1,
+          |       round(L2Norm(emb), 4) AS l2,
+          |       round(LinfNorm(emb), 4) AS linf,
+          |       round(LpNorm(emb, 3.0), 4) AS l3
+          |FROM (SELECT vec_id,
+          |             transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+          |      FROM embeddings)
+          |WHERE vec_id < 50 ORDER BY vec_id""".stripMargin, dir)
+    },
+
+    // Object('json') subcolumn access over events.props (SURVEY §1.1 —
+    // dynamic JSON paths map to get_json_object/JSONExtract*)
+    Q.df("q_json_subcolumns",
+      """SELECT event_type,
+        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT))
+        |            AS BIGINT) AS sk,
+        |       CAST(max(CAST(json_extract_string(props, '$.k') AS INT))
+        |            AS BIGINT) AS mk,
+        |       count(*) AS n
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin) {
+      (s, dir) =>
+      ChSql.sql(s,
+        """SELECT event_type,
+          |       sum(JSONExtractInt(props, 'k')) AS sk,
+          |       CAST(max(JSONExtractInt(props, 'k')) AS BIGINT) AS mk,
+          |       count() AS n
+          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        dir)
+    },
+
+    // H3 table-free family (functions/H3Ch.scala): the oracle pins the
+    // reference's own outputs (00926/01040/01070/02155/02165 fixtures) as
+    // literals — DuckDB has no H3, but the expected values are constants
+    Q.df("q_h3_family",
+      """SELECT * FROM (VALUES
+        |  ('base_cell',   CAST(12 AS BIGINT)),
+        |  ('center15',    CAST(644542512295313408 AS BIGINT)),
+        |  ('is_pentagon', CAST(1 AS BIGINT)),
+        |  ('is_valid',    CAST(1 AS BIGINT)),
+        |  ('num_hex10',   CAST(33897029882 AS BIGINT)),
+        |  ('parent0',     CAST(576918149140578303 AS BIGINT)),
+        |  ('parent3',     CAST(590398848891879423 AS BIGINT)),
+        |  ('res10',       CAST(10 AS BIGINT)),
+        |  ('string_to',   CAST(617420388351344639 AS BIGINT))
+        |) AS t(op, v) ORDER BY op""".stripMargin) { (s, dir) =>
+      // outer subquery: CH binds a trailing ORDER BY to the LAST union
+      // branch, so the global sort needs the wrap (same in both dialects)
+      ChSql.sql(s,
+        """SELECT op, v FROM (
+        |SELECT 'base_cell' AS op,
+        |       toInt64(h3GetBaseCell(612916788725809151)) AS v
+        |UNION ALL SELECT 'center15',
+        |       toInt64(h3ToCenterChild(577023702256844799, 15))
+        |UNION ALL SELECT 'is_pentagon',
+        |       toInt64(h3IsPentagon(stringToH3('821c07fffffffff')))
+        |UNION ALL SELECT 'is_valid',
+        |       toInt64(h3IsValid(581276613233082367))
+        |UNION ALL SELECT 'num_hex10', toInt64(h3NumHexagons(10))
+        |UNION ALL SELECT 'parent0',
+        |       toInt64(h3ToParent(599405990164561919, 0))
+        |UNION ALL SELECT 'parent3',
+        |       toInt64(h3ToParent(599405990164561919, 3))
+        |UNION ALL SELECT 'res10',
+        |       toInt64(h3GetResolution(621807531097128959))
+        |UNION ALL SELECT 'string_to',
+        |       toInt64(stringToH3('89184926cc3ffff'))
+        |) ORDER BY op""".stripMargin, dir)
     }
   )
 }
