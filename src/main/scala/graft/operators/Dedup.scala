@@ -51,20 +51,14 @@ object Dedup {
 
   /** Near-duplicate pairs by MinHash LSH, verified with exact Jaccard.
     *
-    * Cache lifetime: the pipeline persists two internal barriers
-    * (`hashed`: one long array per doc; `sized`: ~32 B × bands per doc)
-    * that are REQUIRED within one execution (3 consumers each — without
-    * them the signature computation runs 3x, see the inline comments)
-    * and are registered in the session's CacheManager once, when this
-    * method BUILDS the DataFrame. Later executions of the returned
-    * DataFrame reuse the cached barriers (the final pairs are not
-    * cached) until something unregisters them. `spark.catalog.clearCache()`
-    * (the bench calls it after every timed run) unregisters them for
-    * good: every later execution of the same DataFrame runs the
-    * barrier-less lineage, re-executing each shared subtree once per
-    * consumer, unless the pipeline is rebuilt. MEMORY_AND_DISK evicts
-    * under pressure, so an unreleased cache degrades gracefully rather
-    * than failing.
+    * Building the DataFrame has no side effect: nothing is cached. The
+    * shingle-hash frame `hashed` (three readers) and the banded frame
+    * `sized` (two readers) are shared within each execution by Spark's
+    * exchange reuse: the second reader of the (band, bucket) exchange gets
+    * a `ReusedExchange`, and one broadcast of `hashed` serves both verify
+    * joins (DedupSimilaritySpec pins both). The trade is that
+    * `ShingleHashes` runs twice per document, once for banding and once
+    * for the broadcast, instead of once into a cache.
     *
     * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     */
@@ -78,17 +72,11 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucketSize: Int = 512): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
 
-    // Stage 1 (persisted): one string-hash per shingle. Everything after
-    // works on long arrays. The persist is a deliberate lineage barrier:
-    // without it, CollapseProject inlines this projection into the 64
-    // min-hash lambdas and the 2 self-join sides, multiplying the string
-    // hashing by ~100×  (observed 12s → 409s at sf0.1 without barriers).
+    // One string-hash per shingle; everything after works on long arrays.
     val hashed = df.select(
       col(idCol).as("id"),
       graft.functions.ShingleHashes(col(textCol), shingleK).as("base"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Banded rows are (band, bucket, id) ONLY — carrying shingle arrays
     // through the 16-way explode would inflate the shuffle 16×. The
@@ -106,21 +94,13 @@ object Dedup {
     // bounding work. The window partitions by (band,bucket) — the same key
     // the self-join shuffles on, so no extra exchange.
     val bw = Window.partitionBy(col("band"), col("bucket"))
-    // Persisted: `sized` has THREE consumers (self-join left, self-join
-    // right, star-pair branch). Without a materialization barrier Spark
-    // re-executes the whole banded subtree — posexplode(MinHashBands) ×
-    // exchange × sort × window — once per consumer (the r15 before-plan
-    // shows the subtree three times), tripling the signature computation
-    // and the (band,bucket) shuffle. The cached rows are (id, band,
-    // bucket, size, min) — ~32 bytes × bands per document, far smaller
-    // than the text, and MEMORY_AND_DISK spills rather than OOMs at
-    // corpus scale. Same deliberate-lineage-cut pattern as `hashed`.
+    // `sized` has two readers (small-bucket pairs and star pairs); both
+    // read the one (band, bucket) exchange under the window.
     val sized = banded
       .withColumn("__bsz", count(lit(1)).over(bw))
       .withColumn("__bmin", min(col("id")).over(bw))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val small = sized.filter(col("__bsz") <= maxBucketSize)
-    // Bucket-local pair generation (r15): the cached `sized` frame is
+    // Bucket-local pair generation (r15): the `sized` frame is
     // already hash-partitioned on (band,bucket) from the window's
     // exchange, so this aggregation runs EXCHANGE-FREE and the pairs are
     // emitted in the same stage. The previous formulation self-joined
@@ -143,19 +123,20 @@ object Dedup {
     val starPairs = sized
       .filter(col("__bsz") > maxBucketSize && col("id") =!= col("__bmin"))
       .select(col("__bmin").as("id_a"), col("id").as("id_b"))
+    // A caller's ORDER BY samples the verify stage, so each pair is
+    // verified twice. Range-partitioning here instead would verify once,
+    // but its own sample re-runs pair generation, which costs more.
     val candidates = allPairs.union(starPairs)
       .dropDuplicates("id_a", "id_b")
 
-    // Exact-Jaccard verification over the persisted distinct-shingle-hash
-    // arrays: |A∩B|/|A∪B| on 64-bit hashes equals the string-shingle
-    // Jaccard (collisions are negligible and would be caught by the
-    // oracle). Reusing `hashed` avoids recomputing shingles — the
-    // interpreted-HOF recompute used to dominate the whole pipeline. The
+    // Exact-Jaccard verification over the distinct-shingle-hash arrays:
+    // |A∩B|/|A∪B| on 64-bit hashes equals the string-shingle Jaccard
+    // (collisions are negligible and would be caught by the oracle). The
     // join strategy is deliberately left to AQE (no broadcast hint):
-    // locally it broadcasts the MB-scale corpus cache; at corpus scale it
-    // would broadcast the (LSH-filtered, far smaller) candidate side or
-    // degrade to a shuffled join — a hint would force-broadcast one side
-    // and OOM on whichever degenerate input makes that side large.
+    // locally it broadcasts `hashed`; at corpus scale it would broadcast
+    // the (LSH-filtered, far smaller) candidate side or degrade to a
+    // shuffled join — a hint would force-broadcast one side and OOM on
+    // whichever degenerate input makes that side large.
     candidates
       .join(hashed.select(col("id").as("id_a"), col("base").as("sh_a")), Seq("id_a"))
       .join(hashed.select(col("id").as("id_b"), col("base").as("sh_b")), Seq("id_b"))

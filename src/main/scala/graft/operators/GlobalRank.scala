@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Scale-safe global ranking primitives.
   *
@@ -29,39 +30,8 @@ object GlobalRank {
     * numbering. */
   def withRowNumber(
       df: DataFrame, order: Seq[Column], out: String = "global_rn",
-      numPartitions: Int = 0): DataFrame = {
-    val p =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // Range partitioning keeps equal keys together and partition ids in
-    // global sort order, so (partition offset + local row_number) is the
-    // global row number. The persist is a REQUIRED lineage barrier, not a
-    // cache optimization: the numbered frame is read by two branches
-    // (per-partition counts and the final join), and without the barrier
-    // each branch may re-materialize `repartitionByRange`, whose boundary
-    // sampling is seeded per RDD — two materializations can disagree on
-    // partition boundaries and desynchronize pids from offsets.
-    val ranged = df.repartitionByRange(p, order: _*)
-      .withColumn("__pid", spark_partition_id())
-    val wLocal = Window.partitionBy(col("__pid"))
-      .orderBy(order.map(c => c): _*)
-    val local = ranged.withColumn("__lrn", row_number().over(wLocal))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Per-partition row count = that partition's max local row number.
-    // Prefix sum over one row per partition — bounded by the partition
-    // count, so the single-task window here is over a broadcast-size frame.
-    val counts = local.groupBy(col("__pid")).agg(max(col("__lrn")).as("__cnt"))
-    val wPrefix = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__off",
-        coalesce(sum(col("__cnt").cast("long")).over(wPrefix), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(out, col("__off") + col("__lrn"))
-      .drop("__pid", "__lrn")
-      .drop("__off")
-  }
+      numPartitions: Int = 0): DataFrame =
+    runningTotal(df, order, count(lit(1)), out, numPartitions)
 
   /** `ntile(k) OVER (ORDER BY order)` with a distributed plan: global row
     * number (see above) + closed-form bucket assignment. Matches SQL ntile
@@ -84,30 +54,57 @@ object GlobalRank {
   }
 
   /** Distributed running (inclusive) sum of `value` over the total order
-    * `order` — same range-partition + per-partition scan + tiny-prefix
-    * design as [[withRowNumber]]. */
+    * `order` — same plan as [[withRowNumber]]. */
   def withRunningSum(
       df: DataFrame, order: Seq[Column], value: Column, out: String,
-      numPartitions: Int = 0): DataFrame = {
+      numPartitions: Int = 0): DataFrame =
+    runningTotal(df, order, sum(value), out, numPartitions)
+
+  /** Running `agg` (an aggregate whose per-partition results add up) over
+    * the total order `order`. Range partitioning keeps equal keys together
+    * and partition ids in global sort order, so a row's global running
+    * total is its partition-local running total plus the sum of the totals
+    * of all earlier partitions.
+    *
+    * The partitioned frame has two readers: the per-partition totals and
+    * the rows the prefix sum is joined back to. They must see the same
+    * range exchange: a second copy would sample its own boundaries, and
+    * partition ids would disagree between the readers. Exchange reuse
+    * shares the subtree when both copies are equal, but column pruning
+    * would strip the totals reader's copy down to the columns it reads.
+    * So the local window also orders by every column of `df`. When `order`
+    * is total these trailing keys never decide a comparison; they only keep
+    * every column referenced in both readers. GlobalRankSpec pins the
+    * single range exchange.
+    */
+  private def runningTotal(
+      df: DataFrame, order: Seq[Column], agg: Column, out: String,
+      numPartitions: Int): DataFrame = {
     val p =
       if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(p, order: _*)
+    // an unorderable column (a map) fails analysis here
+    val byPid = Window.partitionBy(col("__pid")).orderBy(
+      order ++ df.queryExecution.analyzed.output.map(ColumnBridge.column): _*)
+    val local = df.repartitionByRange(p, order: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__v", value)
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("__lsum", sum(col("__v")).over(wLocal))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = local.groupBy(col("__pid")).agg(sum(col("__v")).as("__psum"))
+      .withColumn("__run", agg.over(
+        byPid.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("__tot", agg.over(
+        byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    // Prefix sum over one row per partition — bounded by the partition
+    // count, so the single-task window here is over a broadcast-size frame.
     val wPrefix = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__off", coalesce(sum(col("__psum")).over(wPrefix), lit(0L)))
+    val offsets = local.groupBy(col("__pid")).agg(max(col("__tot")).as("__tot"))
+      .withColumn("__off", sum(col("__tot")).over(wPrefix))
       .select(col("__pid"), col("__off"))
+    // NULL + x is NULL, but a running sum skips NULLs: an all-NULL side
+    // (or the first partition's missing offset) contributes nothing
     local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(out, col("__off") + col("__lsum"))
-      .drop("__pid", "__lsum", "__off", "__v")
+      .withColumn(out,
+        coalesce(col("__off") + col("__run"), col("__run"), col("__off")))
+      .drop("__pid", "__run", "__tot", "__off")
   }
 
   /** `ORDER BY key [DESC] LIMIT n WITH TIES` — equivalently

@@ -284,12 +284,10 @@ object Similarity {
     // struct(id, …) is ordered by id alone and carries the hub's payload
     // along — the star branch below needs no join back to find the hub's
     // vector.
-    // `sized` feeds two consumers (allPairs, starPairs) and is
-    // deliberately NOT persisted, unlike Dedup.minhashPairs' 32 B/row
-    // banded frame: these rows carry the full vectors, so a barrier
-    // would cache a corpus-sized frame — re-executing the lshBucket +
-    // window subtree twice is the cheaper trade at scale (exchange
-    // reuse still dedups the shuffle itself).
+    // `sized` feeds two consumers (allPairs, starPairs) and, like
+    // Dedup.minhashPairs' banded frame, is not persisted: exchange reuse
+    // runs the lshBucket projection and the bucket shuffle once, and only
+    // the window above the shuffle runs once per consumer.
     val sized = b
       .withColumn("__bsz", count(lit(1)).over(bw))
       .withColumn("__bhub",

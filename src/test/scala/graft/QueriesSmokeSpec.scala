@@ -24,6 +24,8 @@ class QueriesSmokeSpec extends SparkSpec {
         "q_intersect_all", "q_having")
       val n = df.count()
       if (!mayBeEmpty.contains(name)) assert(n > 0, s"$name empty")
+      // builders have no side effects: nothing outlives the query
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left cached data")
     }
   }
 }

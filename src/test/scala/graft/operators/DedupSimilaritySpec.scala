@@ -1,9 +1,14 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
-class DedupSimilaritySpec extends SparkSpec {
+class DedupSimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("minhash LSH finds all true near-dup pairs at sf0.001 (recall 1 vs brute force)") {
@@ -74,11 +79,29 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("minhashPairs plan: equi-joins only, no cartesian product") {
     val docs = Tables.load(spark, SparkSpec.tiny, "documents")
-    val plan = Dedup.minhashPairs(docs, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val pairs = Dedup.minhashPairs(docs, "doc_id", "text")
+    val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), s"cartesian found:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"nested-loop join found:\n$plan")
+    // executed: no cache; each multi-reader subtree runs once, its second
+    // reader gets a ReusedExchange
+    pairs.collect()
+    val executed = pairs.queryExecution.executedPlan
+    val text = executed.toString
+    assert(collect(executed) { case s: InMemoryTableScanExec => s }.isEmpty,
+      s"cached relation found:\n$text")
+    val reused = collect(executed) { case r: ReusedExchangeExec => r.child }
+    assert(reused.exists {
+      case s: ShuffleExchangeExec => s.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name } == Seq("band", "bucket")
+        case _ => false
+      }
+      case _ => false
+    }, s"band exchange not reused:\n$text")
+    assert(reused.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"shingle-hash broadcast not reused:\n$text")
   }
 
   test("minhash bucket cap does not change results for normal-size buckets") {

@@ -1,10 +1,18 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
-class GlobalRankSpec extends SparkSpec {
+class GlobalRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def randDf(n: Int) = {
@@ -74,5 +82,68 @@ class GlobalRankSpec extends SparkSpec {
     val got = GlobalRank.limitWithTies(df, $"v", descending = false, n = 2)
       .select("v").as[Int].collect().sorted
     assert(got.toSeq == Seq(1, 1))
+  }
+
+  // ---- property: no cache, yet both readers of the range-partitioned
+  // frame see one range exchange (else each samples its own boundaries)
+
+  private val schema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("v", IntegerType, nullable = false),
+    StructField("w", LongType, nullable = true),
+    StructField("payload", StringType, nullable = true)))
+
+  /** (rows, distinct v values, output partitions): heavy ties on v, a
+    * nullable value, and a payload column that neither builder reads. */
+  private val inputs = for {
+    n <- Gen.choose(2000, 20000)
+    distinct <- Gen.choose(1, 60)
+    parts <- Gen.choose(2, 6)
+    seed <- Gen.long
+  } yield (n, distinct, parts, seed)
+
+  private def rangeExchanges(df: DataFrame): Int = collect(
+    df.queryExecution.executedPlan) {
+      case s: ShuffleExchangeExec
+          if s.outputPartitioning.isInstanceOf[RangePartitioning] => s
+    }.size
+
+  test("withRowNumber and withRunningSum match the window forms; one range exchange") {
+    assert(spark.conf.get("spark.sql.exchange.reuse") == "true")
+    val prop = Prop.forAllNoShrink(inputs) { case (n, distinct, parts, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val rows = (1 to n).map { i => Row(i.toLong, rnd.nextInt(distinct),
+        if (rnd.nextInt(10) == 0) null else rnd.nextLong() % 1000,
+        if (rnd.nextBoolean()) null else s"p$i") }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      val order = Seq(col("v"), col("id"))
+      val w = Window.orderBy(order: _*)
+      // collects `d` itself, so its executed plan is the final one
+      def byId(d: DataFrame, c: String) =
+        d.collect().map(r => r.getAs[Long]("id") -> Option(r.getAs[Any](c))).toMap
+      val rn = GlobalRank.withRowNumber(df, order, "rn", parts)
+      val rs = GlobalRank.withRunningSum(df, order, col("w"), "rs", parts)
+      val ok = byId(rn, "rn") == byId(df.withColumn("rn", row_number().over(w)), "rn") &&
+        byId(rs, "rs") == byId(df.withColumn("rs", sum(col("w")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))), "rs")
+      val exchanges = (rangeExchanges(rn), rangeExchanges(rs))
+      if (!ok || exchanges != ((1, 1)))
+        println(s"[GlobalRankSpec] n=$n distinct=$distinct parts=$parts " +
+          s"seed=$seed: equal=$ok range exchanges=$exchanges")
+      ok && exchanges == ((1, 1))
+    }
+    val seed = Seed.random()
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(8).withInitialSeed(seed),
+      prop)
+    assert(result.passed,
+      s"seed ${seed.toBase64}: ${Pretty.pretty(result, Pretty.Params(0))}")
+  }
+
+  test("an unorderable column is refused, not silently mis-numbered") {
+    val df = Seq((1L, 2, Map("a" -> 1))).toDF("id", "v", "m")
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      GlobalRank.withRowNumber(df, Seq($"v", $"id")))
+    assert(e.getMessage.contains("INVALID_ORDERING_TYPE"), e.getMessage)
   }
 }
