@@ -35,13 +35,13 @@ object GlobalRank {
 
   /** `ntile(k) OVER (ORDER BY order)` with a distributed plan: global row
     * number (see above) + closed-form bucket assignment. Matches SQL ntile
-    * exactly: the first (N mod k) buckets get ceil(N/k) rows. */
+    * exactly: the first (N mod k) buckets get ceil(N/k) rows. N is the sum
+    * of the per-partition counts the row number already computes, so the
+    * input is not scanned again for it. */
   def ntile(
       df: DataFrame, order: Seq[Column], k: Int,
       out: String = "tile"): DataFrame = {
-    val rn = withRowNumber(df, order, "__rn")
-    val total = df.agg(count(lit(1)).as("__n"))
-    val d = rn.join(broadcast(total))
+    val d = runningTotal(df, order, count(lit(1)), "__rn", 0, total = Some("__n"))
     val bsize = floor(col("__n") / k)
     val rem = col("__n") % k
     val cut = rem * (bsize + 1)
@@ -76,10 +76,13 @@ object GlobalRank {
     * is total these trailing keys never decide a comparison; they only keep
     * every column referenced in both readers. GlobalRankSpec pins the
     * single range exchange.
+    *
+    * `total` names an optional extra column holding the sum of all the
+    * partition totals (the aggregate over the whole input).
     */
   private def runningTotal(
       df: DataFrame, order: Seq[Column], agg: Column, out: String,
-      numPartitions: Int): DataFrame = {
+      numPartitions: Int, total: Option[String] = None): DataFrame = {
     val p =
       if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
@@ -97,8 +100,8 @@ object GlobalRank {
     val wPrefix = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = local.groupBy(col("__pid")).agg(max(col("__tot")).as("__tot"))
-      .withColumn("__off", sum(col("__tot")).over(wPrefix))
-      .select(col("__pid"), col("__off"))
+      .select(Seq(col("__pid"), sum(col("__tot")).over(wPrefix).as("__off")) ++
+        total.map(sum(col("__tot")).over().as(_)): _*)
     // NULL + x is NULL, but a running sum skips NULLs: an all-NULL side
     // (or the first partition's missing offset) contributes nothing
     local.join(broadcast(offsets), Seq("__pid"))

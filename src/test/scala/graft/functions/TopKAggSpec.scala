@@ -66,27 +66,32 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("q_ann_topk plan: partial bounded_top_k below the Exchange") {
-    val df = SparkEntry.queries("q_ann_topk")(spark, SparkSpec.tiny)
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan.toString
-    val lines = plan.linesIterator.toSeq
-    val partialIdx = lines.indexWhere(l =>
-      l.contains("ObjectHashAggregate") &&
-        l.contains("partial_bounded_top_k"))
-    val finalIdx = lines.indexWhere(l =>
-      l.contains("ObjectHashAggregate") &&
-        l.contains("bounded_top_k") && !l.contains("partial_"))
-    // the ranking shuffle between final and partial agg (the outer sort
-    // has its own range-partitioning exchange — skip it)
-    val exchangeIdx = lines.indexWhere(
-      _.contains("Exchange hashpartitioning"), math.max(finalIdx, 0))
-    assert(partialIdx >= 0, s"no partial bounded_top_k in plan:\n$plan")
-    assert(exchangeIdx >= 0, s"no Exchange in plan:\n$plan")
-    assert(finalIdx >= 0, s"no final bounded_top_k in plan:\n$plan")
-    // tree printing lists parents first: map-side partial agg prints
-    // AFTER (= below) the exchange, the final agg BEFORE (= above) it
-    assert(finalIdx < exchangeIdx && exchangeIdx < partialIdx,
-      s"plan order final=$finalIdx exchange=$exchangeIdx " +
-        s"partial=$partialIdx:\n$plan")
+    // the fixture is one file: split its scan, so the plan is the
+    // scale-out one (a one-split scan would need no shuffle at all)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    try {
+      val df = SparkEntry.queries("q_ann_topk")(spark, SparkSpec.tiny)
+      df.write.format("noop").mode("overwrite").save()
+      val plan = df.queryExecution.executedPlan.toString
+      val lines = plan.linesIterator.toSeq
+      val partialIdx = lines.indexWhere(l =>
+        l.contains("ObjectHashAggregate") &&
+          l.contains("partial_bounded_top_k"))
+      val finalIdx = lines.indexWhere(l =>
+        l.contains("ObjectHashAggregate") &&
+          l.contains("bounded_top_k") && !l.contains("partial_"))
+      // the ranking shuffle between final and partial agg (the outer sort
+      // has its own range-partitioning exchange — skip it)
+      val exchangeIdx = lines.indexWhere(
+        _.contains("Exchange hashpartitioning"), math.max(finalIdx, 0))
+      assert(partialIdx >= 0, s"no partial bounded_top_k in plan:\n$plan")
+      assert(exchangeIdx >= 0, s"no Exchange in plan:\n$plan")
+      assert(finalIdx >= 0, s"no final bounded_top_k in plan:\n$plan")
+      // tree printing lists parents first: map-side partial agg prints
+      // AFTER (= below) the exchange, the final agg BEFORE (= above) it
+      assert(finalIdx < exchangeIdx && exchangeIdx < partialIdx,
+        s"plan order final=$finalIdx exchange=$exchangeIdx " +
+          s"partial=$partialIdx:\n$plan")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 }

@@ -78,30 +78,35 @@ class DedupSimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("minhashPairs plan: equi-joins only, no cartesian product") {
-    val docs = Tables.load(spark, SparkSpec.tiny, "documents")
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text")
-    val plan = pairs.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), s"cartesian found:\n$plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      s"nested-loop join found:\n$plan")
-    // executed: no cache; each multi-reader subtree runs once, its second
-    // reader gets a ReusedExchange
-    pairs.collect()
-    val executed = pairs.queryExecution.executedPlan
-    val text = executed.toString
-    assert(collect(executed) { case s: InMemoryTableScanExec => s }.isEmpty,
-      s"cached relation found:\n$text")
-    val reused = collect(executed) { case r: ReusedExchangeExec => r.child }
-    assert(reused.exists {
-      case s: ShuffleExchangeExec => s.outputPartitioning match {
-        case h: HashPartitioning =>
-          h.expressions.collect { case a: Attribute => a.name } == Seq("band", "bucket")
+    // the fixture is one file: split its scan, so the plan is the
+    // scale-out one (a one-split scan would need no shuffle at all)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+    try {
+      val docs = Tables.load(spark, SparkSpec.tiny, "documents")
+      val pairs = Dedup.minhashPairs(docs, "doc_id", "text")
+      val plan = pairs.queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct"), s"cartesian found:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        s"nested-loop join found:\n$plan")
+      // executed: no cache; each multi-reader subtree runs once, its second
+      // reader gets a ReusedExchange
+      pairs.collect()
+      val executed = pairs.queryExecution.executedPlan
+      val text = executed.toString
+      assert(collect(executed) { case s: InMemoryTableScanExec => s }.isEmpty,
+        s"cached relation found:\n$text")
+      val reused = collect(executed) { case r: ReusedExchangeExec => r.child }
+      assert(reused.exists {
+        case s: ShuffleExchangeExec => s.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.collect { case a: Attribute => a.name } == Seq("band", "bucket")
+          case _ => false
+        }
         case _ => false
-      }
-      case _ => false
-    }, s"band exchange not reused:\n$text")
-    assert(reused.exists(_.isInstanceOf[BroadcastExchangeExec]),
-      s"shingle-hash broadcast not reused:\n$text")
+      }, s"band exchange not reused:\n$text")
+      assert(reused.exists(_.isInstanceOf[BroadcastExchangeExec]),
+        s"shingle-hash broadcast not reused:\n$text")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("minhash bucket cap does not change results for normal-size buckets") {

@@ -42,6 +42,21 @@ class GlobalRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("ntile reads its input twice: the range sample and the shuffle") {
+    val parts = 4
+    val reads = spark.sparkContext.longAccumulator("ntile-input-reads")
+    val df = spark.sparkContext.parallelize(1 to 500, parts)
+      .mapPartitions { it => reads.add(1); it }
+      .map(i => (i.toLong, i * 7919 % 50)).toDF("id", "v")
+    val expected = df.withColumn("t", ntile(7).over(Window.orderBy($"v", $"id")))
+      .select($"id", $"t").as[(Long, Int)].collect().toMap
+    reads.reset()
+    val got = GlobalRank.ntile(df, Seq($"v", $"id"), 7, "t")
+      .select($"id", $"t").as[(Long, Int)].collect().toMap
+    assert(got == expected)
+    assert(reads.value == 2 * parts, s"${reads.value} partition reads")
+  }
+
   test("ntile with fewer rows than buckets") {
     val df = Seq((1L, 10), (2L, 20)).toDF("id", "v")
     val got = GlobalRank.ntile(df, Seq($"v", $"id"), 4, "t")
