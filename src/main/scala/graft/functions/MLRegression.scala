@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *     deterministic for any partitioning. Above the cap the scale path
   *     is [[graft.operators.MLFit.logisticFit]]: driver-coordinated
   *     multi-pass gradient descent where each pass is one distributed
-  *     aggregation (the ivfTopK k-means precedent — SCALE.md).
+  *     aggregation.
   *
   * The model value is struct(kind, weights[n+1]) (bias last);
   * evalMLMethod(model, f1..fn) applies dot+bias, with a sigmoid on top

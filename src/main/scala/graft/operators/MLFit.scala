@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * shuffle of the data, only of m+1 doubles per partition), the driver
   * updates the m+1 weights and broadcasts them back as literals in the
   * next iteration's expressions. Driver state is O(features), never
-  * O(rows) — the same amortized-coordinator shape as ivfTopK's k-means
-  * (SCALE.md). Deterministic up to floating-point reduction order.
+  * O(rows). Deterministic up to floating-point reduction order.
   */
 object MLFit {
 

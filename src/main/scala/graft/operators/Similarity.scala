@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/src/Functions/array/arrayDistance.cpp`) and the Annoy
   * vector index (`src/Storages/MergeTree/MergeTreeIndexAnnoy.cpp`).
   *
-  * Two paths:
+  * Paths:
   *  - `bruteForceTopK`: exact — broadcast the (small) query set against the
   *    corpus scan; per-query top-k via window over rounded score (ties
   *    broken by id so results are deterministic). Scales with corpus size
@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *  - `lshBucketTopK`: approximate scale path — sign-random-projection
   *    buckets (Charikar hyperplane LSH); queries only join candidates in
   *    the same bucket, turning the n×m product into a bucket-local join.
+  *  - `ivfTopK` / `pqTopK`: k-means quantizers, both trained by one
+  *    driver-side fitter (`fitCodebooks`).
   *
   * All vector math runs through the fused single-pass kernels in
   * graft.functions.VectorOps (bit-identical to the composed
@@ -36,8 +38,25 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(graft.functions.VectorOps.l2sqD(a, b))
+  def l2Distance(a: Column, b: Column): Column = sqrt(l2sq(a, b))
+
+  private def l2sq(a: Column, b: Column): Column =
+    graft.functions.VectorOps.l2sqD(a, b)
+
+  /** Subvector j (`sub` doubles) of an embedding column. */
+  private def subvec(vecCol: String, j: Int, sub: Int): Column =
+    slice(col(vecCol).cast("array<double>"), j * sub + 1, sub)
+
+  /** Per-query top-k of scored (query_id, neighbor_id, score) rows by a
+    * window over (score, neighbor_id): (query_id, neighbor_id, score, rank). */
+  private def rankPerQuery(scored: DataFrame, score: String,
+      descending: Boolean, k: Int): DataFrame = {
+    val order = if (descending) col(score).desc else col(score).asc
+    val w = Window.partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(score), col("rank"))
+  }
 
   /** Per-query top-k of scored (query_id, neighbor_id, score) rows via
     * the bounded-k aggregate: the map side combines each partition down
@@ -131,25 +150,17 @@ object Similarity {
       .withColumn("__rn", row_number().over(cw))
       .filter(col("__rn") <= maxBucketSize)
       .drop("__rn")
-    // Score BEFORE the cross-table dedup (r15, guide §2.2 — shuffle fewer
-    // bytes): a (query, neighbor) pair found in several tables carries
-    // identical vectors, hence a bit-identical cos_sim, so deduping after
-    // scoring returns the same rows while the dedup exchange moves
-    // (id, id, score) instead of both vectors (~24 B vs ~2·dim·4 B per
-    // row). The per-duplicate extra dot products run map-side, pre-shuffle,
-    // and are bounded by nTables.
+    // Score before the cross-table dedup: a pair found in several tables
+    // has a bit-identical cos_sim, so the dedup exchange moves
+    // (id, id, score) rows instead of both vectors (≤ nTables extra dot
+    // products per pair, map-side).
     val scored = c.join(q, Seq("table_id", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim", round(
         dot(col("__qv"), col("__cv")) / (col("__qn") * col("__cn")), 6))
       .select("query_id", "neighbor_id", "cos_sim")
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-        col("rk").as("rank"))
+    rankPerQuery(scored, "cos_sim", descending = true, k)
   }
 
   /** IVF (inverted-file) ANN: k-means coarse quantizer over the corpus,
@@ -157,29 +168,21 @@ object Similarity {
     * rows in those cells. The 100 TB layout: centroids are tiny and
     * broadcast; the corpus is partitioned by cell id once (at "index
     * build"), so a query touches nprobe/nlist of the data. Recall/latency
-    * tradeoff = nprobe, exactly like FAISS IVF-Flat.
+    * tradeoff = nprobe, exactly like FAISS IVF-Flat. The quantizer is
+    * [[fitCodebooks]]' and a row's cell is [[pqEncode]]'s `nearest`.
     * (Reference analog: the Annoy vector index,
     * `src/Storages/MergeTree/MergeTreeIndexAnnoy.cpp`.) */
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame,
       queryId: String, corpusId: String, vecCol: String,
-      k: Int, nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val corpusVec = corpus.select(col(corpusId).as("neighbor_id"),
+      k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+    val book = fitCodebooks(corpus, vecCol, m = 1, nlist)(0)
+    val cells = corpus.select(col(corpusId).as("neighbor_id"),
       col(vecCol).as("__cv"),
-      array_to_vector(col(vecCol).cast("array<double>")).as("__features"))
-    val model = new KMeans().setK(nlist).setSeed(seed)
-      .setFeaturesCol("__features").fit(corpusVec)
-    val cells = model.transform(corpusVec)
-      .select(col("neighbor_id"), col("__cv"), col("prediction").as("cell"))
+      nearest(col(vecCol).cast("array<double>"), book).as("cell"))
     // nprobe nearest centroids per query via the (tiny) centroid table
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray)
-    }.toSeq
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroidDf = centroids.toDF("cell", "__centroid")
+    val centroidDf = queries.sparkSession.createDataFrame(
+      book.toSeq.zipWithIndex.map(_.swap)).toDF("cell", "__centroid")
     val q = queries.select(col(queryId).as("query_id"), col(vecCol).as("__qv"))
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("__cdist").asc, col("cell"))
@@ -191,12 +194,7 @@ object Similarity {
     val scored = cells.join(probes, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos_sim", round(cosine(col("__qv"), col("__cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"),
-        col("rk").as("rank"))
+    rankPerQuery(scored, "cos_sim", descending = true, k)
   }
 
   /** Scalar int8 quantization of an embedding column (the FAISS SQ8 /
@@ -278,41 +276,22 @@ object Similarity {
       norm(col(vecCol)).as("__n"),
       lshBucket(col(vecCol), dim, nPlanes).as("bucket"))
     val bw = Window.partitionBy(col("bucket"))
-    // __bhub = the bucket's min-id MEMBER with its vector and norm: ids
-    // are unique (documented precondition — a duplicated id would make
-    // struct-min fall through to the vector field), so min over
-    // struct(id, …) is ordered by id alone and carries the hub's payload
-    // along — the star branch below needs no join back to find the hub's
-    // vector.
-    // `sized` feeds two consumers (allPairs, starPairs) and, like
-    // Dedup.minhashPairs' banded frame, is not persisted: exchange reuse
-    // runs the lshBucket projection and the bucket shuffle once, and only
-    // the window above the shuffle runs once per consumer.
+    // __bhub = the bucket's min-id member with its vector and norm. Ids
+    // are unique (precondition), so min over struct(id, …) orders by id
+    // alone and carries the hub's payload: the star branch needs no join
+    // back. `sized` feeds allPairs and starPairs; exchange reuse runs the
+    // lshBucket projection and the bucket shuffle once for both.
     val sized = b
       .withColumn("__bsz", count(lit(1)).over(bw))
       .withColumn("__bhub",
         min(struct(col("id"), col("__v"), col("__n"))).over(bw))
-    // Bucket-local pair generation (r15, same rewrite as
-    // Dedup.minhashPairs): the window output is already hash-partitioned
-    // on `bucket`, so the aggregation adds no exchange, and the collected
-    // per-bucket member array is bounded by the __bsz filter (≤
-    // maxBucketSize structs). The previous self-join planned a broadcast
-    // of one full copy of the small-bucket frame — vectors included —
-    // and, with no cache barrier here, re-executed the lshBucket+window
-    // subtree once per join side. ArrayPairs orders struct members by
-    // the leading (unique) id field, so pairs are exactly the join's
-    // id_a < id_b set.
-    // r16: PairsGen streams the (a, b) pairs lazily instead of
-    // explode(ArrayPairs(...)), which materialized all C(n,2) pairs WITH
-    // both vectors duplicated as one array value first — ~67 MB for a
-    // single degenerate 512-struct bucket at dim=64 (r15 VERDICT
-    // "What's wrong" #3, guide §5 per-row memory). Pair multiset and
-    // order are identical (spec-pinned); worst-case live allocation is
-    // now the bucket array itself (≤512 structs ≈ 256 KB).
-    // The trailing id_a =!= id_b guard restores the strict-inequality
-    // contract even if ids are NOT unique (struct ordering would fall
-    // through to the vector fields; ADVICE r15): with unique ids it
-    // filters nothing.
+    // Bucket-local pair generation, as in Dedup.minhashPairs: the window
+    // output is already hash-partitioned on `bucket`, so the aggregation
+    // adds no exchange, and each member array holds ≤ maxBucketSize
+    // structs. PairsGen streams the pairs lazily in id order (id_a < id_b
+    // for unique ids), so live memory is the bucket array, not its
+    // C(n,2) pairs. The id_a =!= id_b guard keeps the strict inequality
+    // if ids repeat.
     val allPairs = sized.filter(col("__bsz") <= maxBucketSize)
       .groupBy(col("bucket"))
       .agg(collect_list(struct(col("id"), col("__v"), col("__n"))).as("__ms"))
@@ -345,59 +324,103 @@ object Similarity {
   // each candidate distance into m array lookups.
 
   /** Per-subspace codebooks: codebooks(j)(c) = centroid c of subspace j.
-    * Driver-side k-means fit — index-build cost, amortized exactly like
-    * [[ivfTopK]]'s coarse quantizer (SCALE.md's quarantine note).
-    *
-    * r16 (guide §1.2 — don't read the same data m times): all m subspace
-    * slices are projected in ONE pass over the corpus and persisted for
-    * the duration of the fits, so the index build reads the source once
-    * instead of m times (each `fit` previously triggered its own scan —
-    * KMeans caches internally per fit, but that still cost m parquet
-    * passes). The cache is released in `finally`, bounded to the fit
-    * phase. Each fit sees the same rows, same partitioning and the same
-    * per-subspace feature column as before, so the codebooks are
-    * unchanged. */
+    * Index-build cost, the same [[fitCodebooks]] as [[ivfTopK]]'s coarse
+    * quantizer: one bounded sample read in one Spark job, sliced into
+    * the m subspaces on the driver. */
   def pqTrain(corpus: DataFrame, vecCol: String, m: Int,
-      ksub: Int = 16, seed: Long = 42L): Array[Array[Array[Double]]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val dim = corpus.select(size(col(vecCol))).first().getInt(0)
+      ksub: Int = 16): Array[Array[Array[Double]]] =
+    fitCodebooks(corpus, vecCol, m, ksub)
+
+  // ------------------------------------------------------ k-means fitter
+  // Both quantizers train on one bounded sample: the k·PointsPerCentroid
+  // vectors (FAISS's default of 256 per centroid) with the smallest
+  // xxhash64, ties broken by the vector. The sample's rows and order, so
+  // every codebook, depend only on the data, never on the scan split, and
+  // its size stops growing with the corpus.
+  private val PointsPerCentroid = 256
+  private val MaxIterations = 20
+  private val Seed = 42L
+
+  /** k-means codebooks of the m equal subspaces of `vecCol` (m = 1: the
+    * whole vectors), each of exactly k centroids. */
+  private[operators] def fitCodebooks(corpus: DataFrame, vecCol: String,
+      m: Int, k: Int): Array[Array[Array[Double]]] = {
+    val sample = corpus.select(col(vecCol).cast("array<double>").as("__v"))
+      .filter(col("__v").isNotNull)
+      // Spark's XxHash64 itself: `xxhash64` by name is CH's once registered
+      .orderBy(graft.functions.ch.sparkXxhash64(col("__v")), col("__v"))
+      .limit(k * PointsPerCentroid).collect().map(_.getSeq[Double](0).toArray)
+    require(sample.nonEmpty, s"k-means: no vectors in $vecCol")
+    val dim = sample(0).length
     require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m")
     val sub = dim / m
-    val sliced = corpus.select((0 until m).map { j =>
-      array_to_vector(
-        slice(col(vecCol).cast("array<double>"), j * sub + 1, sub))
-        .as(s"__features$j")
-    }: _*).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      (0 until m).map { j =>
-        new KMeans().setK(ksub).setSeed(seed + j)
-          .setFeaturesCol(s"__features$j").fit(sliced)
-          .clusterCenters.map(_.toArray)
-      }.toArray
-    } finally sliced.unpersist(false)
+    Array.tabulate(m)(j => kMeans(sample.map(_.slice(j * sub, (j + 1) * sub)), k))
   }
 
-  /** Literal column of one subspace's codebook. */
-  private def bookLit(book: Array[Array[Double]]): Column =
-    array(book.map(c => array(c.map(lit): _*)): _*)
+  /** Lloyd's k-means on the driver: k-means++ seeding from a constant
+    * seed, then at most MaxIterations rounds, stopping early once no
+    * point changes centroid. An empty cluster keeps its centroid, and
+    * seeding repeats the first centroid once every point is one, so the
+    * result always holds exactly k centroids. */
+  private def kMeans(points: Array[Array[Double]],
+      k: Int): Array[Array[Double]] = {
+    def dist2(a: Array[Double], b: Array[Double]): Double =
+      a.indices.foldLeft(0.0) { (s, i) => val d = a(i) - b(i); s + d * d }
+    val rnd = new scala.util.Random(Seed)
+    val first = points(rnd.nextInt(points.length))
+    val centroids = Array.fill(k)(first)
+    val d2 = points.map(dist2(_, first))
+    for (c <- 1 until k) {
+      // D² sampling: point i with probability d2(i) / Σ d2
+      val cum = d2.scanLeft(0.0)(_ + _).tail
+      if (cum.last > 0) {
+        val r = rnd.nextDouble() * cum.last
+        val i = cum.indexWhere(_ > r)  // -1 only if r rounded up to Σ
+        centroids(c) = points(if (i >= 0) i else d2.lastIndexWhere(_ > 0))
+      }
+      for (i <- points.indices) d2(i) = d2(i) min dist2(points(i), centroids(c))
+    }
+    // nearest centroid, the lowest index on ties (as `nearest` below)
+    def assign =
+      points.map(p => centroids.indices.minBy(c => dist2(p, centroids(c))))
+    var cells = Array.fill(points.length)(-1)
+    var next = assign
+    var iter = 0
+    while (iter < MaxIterations && !next.sameElements(cells)) {
+      cells = next
+      for ((c, is) <- points.indices.groupBy(cells(_)))
+        centroids(c) = points(0).indices
+          .map(d => is.map(points(_)(d)).sum / is.size).toArray
+      next = assign
+      iter += 1
+    }
+    centroids
+  }
+
+  /** ‖v − c‖² to each centroid c of `book`. `v` is a lambda argument: on an
+    * outer reference the fused kernel let Spark 4.1 copy q_ann_ivf's join
+    * key to the probe side, which lacks its input (ATTRIBUTE_NOT_FOUND). */
+  private def centroidDists(v: Column, book: Array[Array[Double]]): Column = {
+    val bookLit = array(book.map(c => array(c.map(lit): _*)): _*)
+    zip_with(bookLit, array_repeat(v, book.length), (c, x) => l2sq(x, c))
+  }
+
+  /** Index of the centroid of `book` nearest (L2) to `v`, the lowest
+    * index on ties. */
+  private def nearest(v: Column, book: Array[Array[Double]]): Column = {
+    val dists = centroidDists(v, book)
+    (array_position(dists, array_min(dists)) - 1).cast("int")
+  }
 
   /** Encode vectors to PQ codes (array<int> of length m, one centroid
     * id per subspace) — pure columnar expressions over codebook
-    * literals, fully codegen'd, no UDFs. */
+    * literals, no UDFs. */
   def pqEncode(df: DataFrame, vecCol: String,
       codebooks: Array[Array[Array[Double]]],
       codeCol: String = "pq_code"): DataFrame = {
-    val m = codebooks.length
     val sub = codebooks(0)(0).length
-    def subvec(j: Int) =
-      slice(col(vecCol).cast("array<double>"), j * sub + 1, sub)
-    def l2sq(a: Column, b: Column): Column =
-      graft.functions.VectorOps.l2sqD(a, b)  // fused, bit-identical fold
-    val codes = (0 until m).map { j =>
-      val dists = transform(bookLit(codebooks(j)), c => l2sq(subvec(j), c))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }
+    val codes = codebooks.indices.map(j =>
+      nearest(subvec(vecCol, j, sub), codebooks(j)))
     df.withColumn(codeCol, array(codes: _*))
   }
 
@@ -430,14 +453,9 @@ object Similarity {
     val sub = codebooks(0)(0).length
     val encoded = pqEncode(corpus, vecCol, codebooks)
       .select(col(corpusId).as("neighbor_id"), col("pq_code"))
-    def l2sq(a: Column, b: Column): Column =
-      graft.functions.VectorOps.l2sqD(a, b)  // fused, bit-identical fold
-    def subvec(j: Int) =
-      slice(col(vecCol).cast("array<double>"), j * sub + 1, sub)
     // LUT: luts(j)(c) = ||q_j - centroid_c||² for subspace j
-    val lut = array((0 until m).map { j =>
-      transform(bookLit(codebooks(j)), c => l2sq(subvec(j), c))
-    }: _*)
+    val lut = array((0 until m).map(j =>
+      centroidDists(subvec(vecCol, j, sub), codebooks(j))): _*)
     val q = queries.select(col(queryId).as("query_id"), lut.as("__lut"))
     val scored = encoded.join(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -447,10 +465,7 @@ object Similarity {
           lit(0.0), (acc, v) => acc + v))
     // ADC shortlist (rerank·k per query) — the FAISS IVFPQ+refine shape:
     // the full corpus moves as m-byte codes
-    val sw = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id"))
-    scored.withColumn("__srk", row_number().over(sw))
-      .filter(col("__srk") <= k * rerank)
+    rankPerQuery(scored, "adc_dist", descending = false, k * rerank)
       .select("query_id", "neighbor_id")
   }
 
@@ -460,8 +475,6 @@ object Similarity {
   def pqRefine(shortlist: DataFrame, queries: DataFrame,
       corpus: DataFrame, queryId: String, corpusId: String,
       vecCol: String, k: Int): DataFrame = {
-    def l2sq(a: Column, b: Column): Column =
-      graft.functions.VectorOps.l2sqD(a, b)  // fused, bit-identical fold
     val q = queries.select(col(queryId).as("query_id"),
       col(vecCol).cast("array<double>").as("__qv"))
     val refined = shortlist
@@ -469,11 +482,6 @@ object Similarity {
         col(vecCol).cast("array<double>").as("__cv")), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("l2_dist", round(sqrt(l2sq(col("__qv"), col("__cv"))), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("l2_dist").asc, col("neighbor_id"))
-    refined.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("l2_dist"),
-        col("rk").as("rank"))
+    rankPerQuery(refined, "l2_dist", descending = false, k)
   }
 }

@@ -246,6 +246,7 @@ class DedupSimilaritySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       k = 3, nlist = 16, nprobe = 8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact & ivf).size.toDouble / exact.size
+    info(s"IVF recall $recall")
     assert(recall >= 0.6, s"IVF recall $recall too low")
   }
 

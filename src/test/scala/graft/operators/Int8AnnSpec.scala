@@ -46,6 +46,7 @@ class Int8AnnSpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
+    info(s"recall@10 $recall")
     assert(recall >= 0.9, s"recall $recall")
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) ANN: code shape, encode determinism, and
@@ -52,6 +53,7 @@ class PqAnnSpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
+    info(s"recall@10 $recall")
     assert(recall >= 0.9, s"recall $recall")
   }
 
@@ -61,5 +63,54 @@ class PqAnnSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"))
+  }
+
+  private def deep(books: Array[Array[Array[Double]]]) =
+    books.map(_.map(_.toSeq).toSeq).toSeq
+
+  test("PQ codebooks and IVF rows do not depend on the scan split") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    def build() = {
+      val e = graft.Tables.load(spark, SparkSpec.tiny, "embeddings")
+      val ivf = Similarity.ivfTopK(e.filter(col("vec_id") < 20), e,
+          "vec_id", "vec_id", "embedding", k = 3)
+        .orderBy("query_id", "rank").collect().toSeq
+      (e.select(col("vec_id")).rdd.getNumPartitions,
+        deep(Similarity.pqTrain(e, "embedding", m = 16, ksub = 32)), ivf)
+    }
+    try {
+      val (splits, books, ivf) = build()
+      spark.conf.set(key, "65536")
+      val (splitsSmall, booksSmall, ivfSmall) = build()
+      assert(splitsSmall > splits, s"$splitsSmall splits at 64 KB")
+      assert(booksSmall == books)
+      assert(ivfSmall == ivf)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def points(rows: Seq[Array[Float]]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+  }
+
+  test("k-means fit returns k centroids from fewer distinct points than k") {
+    val rows = Seq.tabulate(30)(i => Array((i % 3).toFloat, 1f))
+    val book = Similarity.fitCodebooks(points(rows), "v", m = 1, k = 8)(0)
+    assert(book.length == 8)
+    assert(book.map(_.toSeq).distinct.sortBy(_.head).toSeq ==
+      Seq(Seq(0.0, 1.0), Seq(1.0, 1.0), Seq(2.0, 1.0)))
+  }
+
+  test("k-means fit is the same for the same points in another row order") {
+    val rnd = new scala.util.Random(7)
+    val rows = Seq.fill(400)(Array.fill(4)(rnd.nextGaussian().toFloat))
+    val a = points(rows).coalesce(1)
+    val b = points(rows.reverse).repartition(4)
+    // k = 8: the whole input is the sample; k = 1: a 256-row sample
+    for (k <- Seq(8, 1))
+      assert(deep(Similarity.fitCodebooks(a, "v", m = 2, k)) ==
+        deep(Similarity.fitCodebooks(b, "v", m = 2, k)), s"k = $k")
   }
 }
