@@ -555,7 +555,6 @@ object ch {
   def arrayStringConcat(a: Column, sep: String = ""): Column = array_join(a, sep)
 
   // ---- arrays (ref src/Functions/array/) ----
-  def arrayElement(a: Column, i: Column): Column = element_at(a, i)
   def has(a: Column, v: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{expression => EE}
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -911,7 +910,6 @@ object ch {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.MaterializeExpr(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
-  def identityCh(c: Column): Column = c
   def versionCh(): Column = lit("23.3.19.32-graft")
   def hostName(): Column = lit("localhost")
   def currentDatabase(): Column = lit("default")

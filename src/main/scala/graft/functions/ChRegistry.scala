@@ -76,7 +76,11 @@ object ChRegistry {
   def register(spark: SparkSession): Unit = {
     if (!registeredSessions.add(spark)) return
     val reg = spark.sessionState.functionRegistry
+    // the registry is case-insensitive: a second registration of a name
+    // would silently replace the first
+    val seen = scala.collection.mutable.Set.empty[String]
     def f(name: String)(b: Seq[Expression] => Column): Unit = {
+      require(seen.add(name.toLowerCase), s"$name is registered twice")
       builders(name.toLowerCase) = b
       // a builder's partial match not covering the given arity must be a
       // regular analysis error (CH NUMBER_OF_ARGUMENTS_DOESNT_MATCH), not
@@ -182,7 +186,7 @@ object ChRegistry {
     }
     tzf("toYear")(ch.toYear); tzf("toQuarter")(ch.toQuarter)
     tzf("toMonth")(ch.toMonth); tzf("toDayOfMonth")(ch.toDayOfMonth)
-    tzf("toDayOfWeek")(ch.toDayOfWeek); tzf("toDayOfYear")(ch.toDayOfYear)
+    tzf("toDayOfYear")(ch.toDayOfYear)
     // mode/tz forms (ref DateLUTImpl.h WeekDayMode): base is Monday=1..7;
     // Sunday-start rotates (res%7+1), zero-based subtracts one
     f("toDayOfWeek") {
@@ -487,7 +491,6 @@ object ChRegistry {
       case Seq(a, sep) => ch.arrayStringConcat(C(a), litStr(sep)) }
 
     // arrays (higher-order fns keep CH argument order: lambda first)
-    f2("arrayElement")(ch.arrayElement)
     f2("has")(ch.has); f2("hasAll")(ch.hasAll); f2("hasAny")(ch.hasAny)
     f2("indexOf")(ch.indexOf); f2("countEqual")(ch.countEqual)
     f("emptyArrayInt64")(_ => ch.emptyArrayInt64())
@@ -938,7 +941,7 @@ object ChRegistry {
     }
     f1("formatReadableSize")(ch.formatReadableSize)
     f("ignore")(es => ch.ignoreCh(es.map(C)))
-    f1("materialize")(ch.materialize); f1("identity")(ch.identityCh)
+    f1("materialize")(ch.materialize)
     f("version") { case Seq() => ch.versionCh() }
     f("hostName") { case Seq() => ch.hostName() }
     f("currentDatabase") { case Seq() => ch.currentDatabase() }
@@ -3492,7 +3495,6 @@ object ChRegistry {
       lit(0).cast("timestamp")))
     // the session runs pinned to UTC, and every stored value carries it
     f1("timeZoneOf")(_ => lit("UTC"))
-    f1("timezoneOf")(_ => lit("UTC"))
     // IPv4NumToStringClassC masks the last octet (ref
     // FunctionsCoding.h IPv4NumToStringClassCImpl: mask_tail_octets=1)
     f1("IPv4NumToStringClassC")(c => concat(

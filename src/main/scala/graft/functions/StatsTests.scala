@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * Spark-first: every statistic is a closed form over built-in
   * (codegen'd, two-phase) aggregates — conditional avg/var/count for the
   * t/z family, covar_pop/var_pop for regression, and distributed
-  * fractional ranks (groupBy + range-partitioned prefix sum, never a
-  * global window) for the rank-based tests. Only the p-value needs code:
+  * fractional ranks (one groupBy of the input, then a range-partitioned
+  * prefix sum over its distinct values, never a global window) for the
+  * rank-based tests. Only the p-value needs code:
   * a scalar expression over (stat, df) backed by commons-math3 (already
   * on Spark's classpath).
   */
@@ -110,60 +111,59 @@ object StatsTests {
 
   // ---- rank-based tests (DataFrame recipes: ranks need a pre-pass) ----
 
-  /** Fractional (average) ranks of `c` over the whole frame, returned as
-    * a (value, avg_rank, cnt) table to join back on. Distributed: groupBy
-    * collapses to distinct values, a range-partitioned prefix sum orders
-    * them — data-size work is one aggregation, never a global window. */
-  def fractionalRanks(df: DataFrame, c: Column): DataFrame = {
-    val byVal = df.select(c.as("__val")).groupBy("__val")
-      .agg(count(lit(1)).as("__cnt"))
+  /** Fractional (average) ranks over `counts`, one row per distinct
+    * `__val` with `__cnt` input rows holding it: adds the running count
+    * `__cum` and `avg_rank`, the 1-based rank the value's rows share.
+    * Distributed: a range-partitioned prefix sum over the distinct values,
+    * never a global window. */
+  def fractionalRanks(counts: DataFrame): DataFrame =
     graft.operators.GlobalRank
-      .withRunningSum(byVal, Seq(col("__val")), col("__cnt"), "__cum")
-      .select(col("__val"),
-        (col("__cum") - col("__cnt") + (col("__cnt") + 1) / 2.0)
-          .as("avg_rank"),
-        col("__cnt"))
-  }
+      .withRunningSum(counts, Seq(col("__val")), col("__cnt"), "__cum")
+      .withColumn("avg_rank",
+        col("__cum") - col("__cnt") + (col("__cnt") + 1) / 2.0)
 
-  /** rankCorr(x, y): Spearman ρ = Pearson corr of fractional ranks. */
+  /** rankCorr(x, y): Spearman ρ = Pearson corr of fractional ranks, over
+    * the rows where neither argument is NULL. The distinct (x, y) pairs
+    * and their counts are the one base that both rankings and the joined
+    * ranks read (one exchange, reused); ρ is the count-weighted Pearson
+    * over the pairs. */
   def rankCorr(df: DataFrame, x: Column, y: Column): DataFrame = {
-    val rx = fractionalRanks(df, x)
-      .select(col("__val").as("__xv"), col("avg_rank").as("__rx"))
-    val ry = fractionalRanks(df, y)
-      .select(col("__val").as("__yv"), col("avg_rank").as("__ry"))
-    df.select(x.as("__xv"), y.as("__yv"))
-      .join(rx, Seq("__xv"))
-      .join(ry, Seq("__yv"))
-      .agg(corr(col("__rx"), col("__ry")).as("rho"))
+    val pairs = df.select(x.as("__x"), y.as("__y"))
+      .where(col("__x").isNotNull && col("__y").isNotNull)
+      .groupBy("__x", "__y").agg(count(lit(1)).as("__c"))
+    def ranks(v: String) = fractionalRanks(
+        pairs.groupBy(col(v).as("__val")).agg(sum("__c").as("__cnt")))
+      .select(col("__val").as(v), col("avg_rank").as(s"${v}r"))
+    val (c, rx, ry) = (col("__c"), col("__xr"), col("__yr"))
+    val (n, sx, sy) = (sum(c), sum(c * rx), sum(c * ry))
+    pairs.join(ranks("__x"), "__x").join(ranks("__y"), "__y")
+      .agg(((n * sum(c * rx * ry) - sx * sy) / sqrt(
+        (n * sum(c * rx * rx) - sx * sx) * (n * sum(c * ry * ry) - sy * sy)))
+        .as("rho"))
   }
 
   /** mannWhitneyUTest(value, inFirstGroup) → one row
     * (u1, u2, z, p): rank-sum U statistics, normal approximation with tie
-    * correction (ref AggregateFunctionMannWhitney.cpp). */
+    * correction (ref AggregateFunctionMannWhitney.cpp), over the rows
+    * where neither argument is NULL. One groupBy counts the rows of each
+    * distinct value, in all (`__cnt`) and in the first group (`__c1`);
+    * the statistics are sums over the ranked values. */
   def mannWhitneyUTest(df: DataFrame, value: Column,
       first: Column): DataFrame = {
-    val base = df.select(value.as("__v"), first.as("__f"))
-    val ranks = fractionalRanks(base, col("__v"))
-      .select(col("__val").as("__v"), col("avg_rank"), col("__cnt"))
-    val joined = base.join(ranks, Seq("__v"))
-    joined.agg(
-        sum(when(col("__f"), col("avg_rank"))).as("r1"),
-        count(when(col("__f"), lit(1))).cast("double").as("n1"),
-        count(when(!col("__f"), lit(1))).cast("double").as("n2"),
-        // tie term Σ_groups(t³−t): each row of a t-sized tie group
-        // contributes (t³−t)/t = t²−1
-        sum(pow(col("__cnt"), 2) - lit(1.0)).as("__tie_per_row"))
-      .withColumn("u1", col("r1") - col("n1") * (col("n1") + 1) / 2)
-      .withColumn("u2", col("n1") * col("n2") - col("u1"))
-      .withColumn("__n", col("n1") + col("n2"))
-      .withColumn("__mu", col("n1") * col("n2") / 2)
-      .withColumn("__sigma", sqrt(
-        col("n1") * col("n2") / 12 *
-          ((col("__n") + 1) - col("__tie_per_row") /
-            (col("__n") * (col("__n") - 1)))))
-      .withColumn("z", (col("u1") - col("__mu")) / col("__sigma"))
+    val counts = df.select(value.as("__val"), first.as("__f"))
+      .where(col("__val").isNotNull && col("__f").isNotNull)
+      .groupBy("__val").agg(count(lit(1)).as("__cnt"),
+        count(when(col("__f"), lit(1))).as("__c1"))
+    val (cnt, c1) = (col("__cnt"), col("__c1"))
+    val (n1, n2) = (sum(c1).cast("double"), sum(cnt - c1).cast("double"))
+    val n = n1 + n2
+    val tie = sum(pow(cnt, 3) - cnt) // Σ over tie groups of t³−t
+    val u1 = sum(col("avg_rank") * c1) - n1 * (n1 + 1) / 2
+    val z = (u1 - n1 * n2 / 2) /
+      sqrt(n1 * n2 / 12 * ((n + 1) - tie / (n * (n - 1))))
+    fractionalRanks(counts)
+      .agg(u1.as("u1"), (n1 * n2 - u1).as("u2"), z.as("z"))
       .withColumn("p", zPValue(col("z")))
-      .select("u1", "u2", "z", "p")
   }
 }
 

@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   *  - `withRowNumber`: range-partition on the sort key (the same machinery
   *    as Spark's distributed global sort), local row_number per partition,
   *    then add per-partition offsets computed by a prefix sum over the
-  *    (tiny, one-row-per-partition) count frame.
+  *    (tiny, one-row-per-partition) count frame, which a plain aggregate
+  *    takes from the same range exchange.
   *  - `ntile`: bucket assignment from the global row number in closed form.
   *  - `limitWithTies`: `LIMIT n WITH TIES` (reference
   *    `src/Processors/LimitTransform.h:17`) as threshold-filter — a cheap
@@ -66,16 +67,17 @@ object GlobalRank {
     * total is its partition-local running total plus the sum of the totals
     * of all earlier partitions.
     *
-    * The partitioned frame has two readers: the per-partition totals and
-    * the rows the prefix sum is joined back to. They must see the same
-    * range exchange: a second copy would sample its own boundaries, and
-    * partition ids would disagree between the readers. Exchange reuse
-    * shares the subtree when both copies are equal, but column pruning
-    * would strip the totals reader's copy down to the columns it reads.
-    * So the local window also orders by every column of `df`. When `order`
-    * is total these trailing keys never decide a comparison; they only keep
-    * every column referenced in both readers. GlobalRankSpec pins the
-    * single range exchange.
+    * The partitioned frame has two readers: the local window and the
+    * per-partition totals, a plain aggregate joined back as a prefix sum.
+    * They must see the same range exchange: a second copy would sample its
+    * own boundaries, and partition ids would disagree between the readers.
+    * Exchange reuse shares the subtree when both copies are equal, but
+    * column pruning would strip the totals reader's copy down to the
+    * columns it reads. So the range partitioning also orders by every
+    * column of `df`. When `order` is total these trailing keys never
+    * decide a comparison; they only keep every column referenced in both
+    * readers. GlobalRankSpec pins the single range exchange and the single
+    * row-level window.
     *
     * `total` names an optional extra column holding the sum of all the
     * partition totals (the aggregate over the whole input).
@@ -87,19 +89,17 @@ object GlobalRank {
       if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     // an unorderable column (a map) fails analysis here
-    val byPid = Window.partitionBy(col("__pid")).orderBy(
-      order ++ df.queryExecution.analyzed.output.map(ColumnBridge.column): _*)
-    val local = df.repartitionByRange(p, order: _*)
+    val ranged = df.repartitionByRange(p,
+        order ++ df.queryExecution.analyzed.output.map(ColumnBridge.column): _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__run", agg.over(
-        byPid.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__tot", agg.over(
-        byPid.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+    val local = ranged.withColumn("__run", agg.over(
+      Window.partitionBy(col("__pid")).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     // Prefix sum over one row per partition — bounded by the partition
     // count, so the single-task window here is over a broadcast-size frame.
     val wPrefix = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col("__pid")).agg(max(col("__tot")).as("__tot"))
+    val offsets = ranged.groupBy(col("__pid")).agg(agg.as("__tot"))
       .select(Seq(col("__pid"), sum(col("__tot")).over(wPrefix).as("__off")) ++
         total.map(sum(col("__tot")).over().as(_)): _*)
     // NULL + x is NULL, but a running sum skips NULLs: an all-NULL side
@@ -107,7 +107,7 @@ object GlobalRank {
     local.join(broadcast(offsets), Seq("__pid"))
       .withColumn(out,
         coalesce(col("__off") + col("__run"), col("__run"), col("__off")))
-      .drop("__pid", "__run", "__tot", "__off")
+      .drop("__pid", "__run", "__off")
   }
 
   /** `ORDER BY key [DESC] LIMIT n WITH TIES` — equivalently

@@ -2,6 +2,9 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class StatsTestsSpec extends SparkSpec {
   import spark.implicits._
@@ -59,8 +62,9 @@ class StatsTestsSpec extends SparkSpec {
   }
 
   test("fractionalRanks averages tie groups") {
-    val df = Seq(10, 20, 20, 30).toDF("v")
-    val got = StatsTests.fractionalRanks(df, col("v"))
+    val df = Seq(10, 20, 20, 30).toDF("__val")
+      .groupBy("__val").agg(count(lit(1)).as("__cnt"))
+    val got = StatsTests.fractionalRanks(df)
       .select(col("__val"), col("avg_rank")).as[(Int, Double)].collect().toMap
     assert(got == Map(10 -> 1.0, 20 -> 2.5, 30 -> 4.0))
   }
@@ -75,5 +79,68 @@ class StatsTestsSpec extends SparkSpec {
       .head()
     assert(r._1 == 0.0 && r._2 == 9.0)
     assert(math.abs(r._3 + 1.9640) < 0.001) // -(4.5)/sqrt(5.25)
+  }
+
+  test("rankCorr skips a row whose y is NULL") {
+    // pairs (1,1), (3,3), (4,2): x ranks 1,2,3 against y ranks 1,3,2
+    val df = Seq((1, Some(1)), (2, None), (3, Some(3)), (4, Some(2))).toDF("x", "y")
+    val rho = StatsTests.rankCorr(df, col("x"), col("y")).as[Double].head()
+    assert(math.abs(rho - 0.5) < 1e-12, rho)
+  }
+
+  test("mannWhitneyUTest skips a row with a NULL value") {
+    val rows = Seq(1.0, 3.0, 3.0, 5.0).map(v => (Option(v), true)) ++
+      Seq(2.0, 3.0, 4.0).map(v => (Option(v), false))
+    def stats(rs: Seq[(Option[Double], Boolean)]) =
+      StatsTests.mannWhitneyUTest(rs.toDF("v", "f"), col("v"), col("f"))
+        .select(col("u1"), col("u2"), col("z")).as[(Double, Double, Double)]
+        .head()
+    assert(stats(rows :+ ((None, false))) == stats(rows))
+  }
+
+  // ---- property: the DataFrame rankCorr against the collecting
+  // aggregate, and fractional ranks against a plain-Scala reference
+
+  /** 1-based average ranks: a tie run shares the mean of its positions. */
+  private def averageRanks(vs: Seq[Int]): Map[Int, Double] = {
+    val sorted = vs.sorted
+    sorted.distinct.map(v =>
+      v -> (sorted.indexOf(v) + sorted.lastIndexOf(v) + 2) / 2.0).toMap
+  }
+
+  /** Heavy ties (a few distinct values, negatives included) and NULLs. */
+  private val pairs = for {
+    distinct <- Gen.choose(1, 8)
+    v = Gen.option(Gen.choose(-distinct, distinct))
+    rows <- Gen.choose(0, 60).flatMap(Gen.listOfN(_, Gen.zip(v, v)))
+  } yield rows
+
+  test("rankCorr matches RankCorrAgg over the non-NULL pairs; ranks are averaged") {
+    val prop = Prop.forAllNoShrink(pairs) { rows =>
+      val df = rows.toDF("x", "y")
+      val got = Option(StatsTests.rankCorr(df, col("x"), col("y")).head().get(0))
+      val complete = rows.collect { case (Some(x), Some(y)) => (x.toDouble, y.toDouble) }
+      val agg = new RankCorrAgg
+      val want = agg.finish(complete.foldLeft(agg.zero)(agg.reduce))
+      // no pair left: the sums are NULL, where the aggregate says NaN
+      val rhoOk = got match {
+        case None => complete.isEmpty
+        case Some(g: Double) => g.isNaN && want.isNaN || math.abs(g - want) < 1e-9
+      }
+      val xs = rows.flatMap(_._1)
+      val ranks = StatsTests.fractionalRanks(
+          xs.toDF("__val").groupBy("__val").agg(count(lit(1)).as("__cnt")))
+        .select("__val", "avg_rank").as[(Int, Double)].collect().toMap
+      val ranksOk = ranks == averageRanks(xs)
+      if (!rhoOk || !ranksOk) println(s"[StatsTestsSpec] $rows: rho $got, " +
+        s"RankCorrAgg $want; ranks $ranks")
+      rhoOk && ranksOk
+    }
+    val seed = Seed.random()
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(20).withInitialSeed(seed),
+      prop)
+    assert(result.passed,
+      s"seed ${seed.toBase64}: ${Pretty.pretty(result, Pretty.Params(0))}")
   }
 }

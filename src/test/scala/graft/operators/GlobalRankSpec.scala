@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -123,6 +124,13 @@ class GlobalRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           if s.outputPartitioning.isInstanceOf[RangePartitioning] => s
     }.size
 
+  /** Windows over the rows themselves; the prefix sum over one row per
+    * partition has no partition spec. */
+  private def rowWindows(df: DataFrame): Int = collect(
+    df.queryExecution.executedPlan) {
+      case w: WindowExec if w.partitionSpec.nonEmpty => w
+    }.size
+
   test("withRowNumber and withRunningSum match the window forms; one range exchange") {
     assert(spark.conf.get("spark.sql.exchange.reuse") == "true")
     val prop = Prop.forAllNoShrink(inputs) { case (n, distinct, parts, seed) =>
@@ -141,11 +149,11 @@ class GlobalRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val ok = byId(rn, "rn") == byId(df.withColumn("rn", row_number().over(w)), "rn") &&
         byId(rs, "rs") == byId(df.withColumn("rs", sum(col("w")).over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow))), "rs")
-      val exchanges = (rangeExchanges(rn), rangeExchanges(rs))
-      if (!ok || exchanges != ((1, 1)))
+      val shape = Seq(rn, rs).map(d => (rangeExchanges(d), rowWindows(d)))
+      if (!ok || shape != Seq((1, 1), (1, 1)))
         println(s"[GlobalRankSpec] n=$n distinct=$distinct parts=$parts " +
-          s"seed=$seed: equal=$ok range exchanges=$exchanges")
-      ok && exchanges == ((1, 1))
+          s"seed=$seed: equal=$ok (range exchanges, row windows)=$shape")
+      ok && shape == Seq((1, 1), (1, 1))
     }
     val seed = Seed.random()
     val result = Test.check(
